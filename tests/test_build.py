@@ -8,8 +8,12 @@ membership)."""
 
 from __future__ import annotations
 
+import threading
+
+import pytest
 from pyspark.sql import functions as F
 
+import wtq.build
 from wtq.build import BENCH_SLICE_MOD, _hash_bucket, build_training_set
 
 
@@ -191,7 +195,7 @@ def test_build_classifier_gate_drops_negative_family(spark, pages_path, tmp_path
     )
 
     out_b = str(tmp_path / "corpus_nogate")
-    base = build_training_set(spark, src, out_b, num_partitions=8, lsh_audit=False)
+    base = build_training_set(spark, src, out_b, num_partitions=8)
     base_written = spark.read.parquet(out_b)
     assert base_written.filter(F.col("url").contains("nfam")).count() > 0
     assert base_written.filter(F.col("url").contains("pfam")).count() > 0
@@ -199,7 +203,7 @@ def test_build_classifier_gate_drops_negative_family(spark, pages_path, tmp_path
 
     out_g = str(tmp_path / "corpus_gated")
     gated = build_training_set(
-        spark, src, out_g, num_partitions=8, lsh_audit=False, classifier_seed=seed
+        spark, src, out_g, num_partitions=8, classifier_seed=seed
     )
     lineage = {r.stage: r.n_docs for r in gated.lineage.collect()}
     assert (
@@ -210,3 +214,23 @@ def test_build_classifier_gate_drops_negative_family(spark, pages_path, tmp_path
     written = spark.read.parquet(out_g)
     assert written.filter(F.col("url").contains("nfam")).count() == 0
     assert written.filter(F.col("url").contains("pfam")).count() > 0
+
+
+def test_build_failure_leaks_no_pool_threads(spark, pages_path, tmp_path, monkeypatch):
+    """A stage that raises must not leave the build's driver thread
+    pool (or the Spark job running on it) behind the exception."""
+
+    def pool_threads():
+        return {
+            t for t in threading.enumerate()
+            if t.name.startswith("ThreadPoolExecutor-") and t.is_alive()
+        }
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("dedup stage failed")
+
+    before = pool_threads()
+    monkeypatch.setattr(wtq.build, "dedup_resolution", boom)
+    with pytest.raises(RuntimeError, match="dedup stage failed"):
+        build_training_set(spark, pages_path, str(tmp_path / "corpus"), num_partitions=8)
+    assert pool_threads() - before == set()

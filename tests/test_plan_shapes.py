@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+import wtq.operators.dedup as D
 from wtq.pipeline import decide
 from wtq.plans.audit import assert_in_plan, count_occurrences, plan_string
 from wtq.queries import QUERIES
@@ -79,15 +80,44 @@ def test_simhash_is_single_arrow_pass(spark):
     assert "HashAggregate" not in plan and "SortAggregate" not in plan
 
 
-def test_pair_queries_single_arrow_pass(spark):
+def test_pair_queries_single_arrow_pass(spark, monkeypatch):
     """Signature UDFs must be evaluated exactly once in pair-generation
     plans. Two past regressions guarded here: a bucket SELF-JOIN
     duplicates the upstream subtree, and a filter on the UDF column
-    pushes below the repartition and re-runs the whole Arrow pass
+    pushes below the input exchange and re-runs the whole Arrow pass
     serially over the unsplit scan."""
     for name in ("simhash_near_pairs", "dedup_minhash_lsh"):
         plan = plan_string(QUERIES[name](spark, SF_DIR), mode="simple")
         assert plan.count("ArrowEvalPython") == 1, f"{name} runs the UDF more than once"
+
+    # the operators called directly: one signature pass each and no
+    # round-robin input exchange of their own.  dedup_resolution
+    # checkpoints its bucket table, so its plans are the checkpointed
+    # frames' plans plus those of the two frames it returns.
+    df = spark.createDataFrame(
+        [(i, f"doc {i} shares a few words with its neighbours here") for i in range(20)],
+        "doc_id long, text string",
+    )
+    checkpointed = []
+    local_checkpoint = type(df).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(plan_string(self, mode="simple"))
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", spy)
+    labels, stats = D.dedup_resolution(df, "doc_id", "text")
+    monkeypatch.undo()
+    plans = {
+        "minhash_lsh_pairs": plan_string(D.minhash_lsh_pairs(df, "doc_id", "text"), mode="simple"),
+        "simhash": plan_string(D.simhash(df, "doc_id", "text"), mode="simple"),
+        "dedup_resolution": "\n".join(
+            checkpointed + [plan_string(labels, mode="simple"), plan_string(stats, mode="simple")]
+        ),
+    }
+    for name, plan in plans.items():
+        assert plan.count("ArrowEvalPython") == 1, f"{name}: {plan[:3000]}"
+        assert "RoundRobinPartitioning" not in plan, f"{name}: {plan[:3000]}"
 
 
 def test_deciles_no_global_single_task_sort(spark):

@@ -321,6 +321,24 @@ def test_lsh_bucket_stats_audits_caller_supplied_cap(spark):
     default_stats = D.lsh_bucket_stats(df, "doc_id", "text").collect()
     assert not any(r.over_cap for r in default_stats)
 
+    # dedup_resolution audits its own representative bucket table with
+    # the cap it paired under: the byte-identical flood collapses to
+    # one rep (every bucket holds one doc, nothing over the cap) ...
+    _, res_stats = D.dedup_resolution(df, "doc_id", "text", bucket_cap=5)
+    res_stats = res_stats.collect()
+    assert {r.bucket_size for r in res_stats} == {1}
+    assert not any(r.over_cap for r in res_stats)
+    # ... while a near-but-not-exact flood (distinct fingerprints) keeps
+    # its shared band buckets, which read as over the same cap
+    common = " ".join(f"w{j}" for j in range(30))
+    near = spark.createDataFrame(
+        [(i, f"{common} tail{i}") for i in range(50)], "doc_id long, text string"
+    )
+    _, near_stats = D.dedup_resolution(near, "doc_id", "text", bucket_cap=5)
+    near_stats = near_stats.collect()
+    assert max(r.bucket_size for r in near_stats) > 5
+    assert any(r.over_cap for r in near_stats)
+
 
 def test_lsh_bucket_cap_degrades_to_star_edges(spark):
     """With the cap forced tiny, an over-cap bucket emits LINEAR star
@@ -342,8 +360,8 @@ def test_lsh_bucket_cap_degrades_to_star_edges(spark):
     # normal-sized buckets still emit ordinary pairs
     assert any(r.doc1 == 2000 and r.doc2 == 2001 for r in pairs)
     # and the clusters are fully recovered either way
-    cc = {r.cluster for r in D.dedup_resolution(df, "doc_id", "text").collect()}
-    assert cc == {0, 2000}
+    labels, _ = D.dedup_resolution(df, "doc_id", "text")
+    assert {r.cluster for r in labels.collect()} == {0, 2000}
 
 
 def test_simhash_cap_degrades_to_verified_star(spark):

@@ -20,16 +20,22 @@ ordering everywhere — rerunning yields byte-identical membership).
 
 Scale shape: each stage is the operator documented in SCALE.md; the
 composition adds no new shuffle beyond its stages (the lineage table
-is a union of per-stage counts — driver-sized, never data).  The one
-optional extra pass is the LSH bucket-occupancy audit (`lsh_audit`),
-which re-runs the signature UDF over the exact-dedup representatives
-to record over-cap bucket counts in the lineage — the observability a
-production dedup run wants, priced at one additional narrow pass over
-the post-collapse survivor set."""
+is a union of per-stage counts — driver-sized, never data).  The
+lineage always carries the LSH bucket-occupancy audit: over-cap bucket
+count and max bucket size of the exact-dedup representatives' band
+buckets, aggregated from the ids-only bucket table the dedup stage
+already materialized for pair generation — no second signature pass.
+
+Failure paths leak nothing: the driver thread pool that runs the
+independent counts is a context manager, and a failing stage cancels
+its queued work before the exception leaves the build."""
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +58,19 @@ def _hash_bucket(col: str, mod: int):
     )
 
 
+@contextmanager
+def _driver_pool() -> Iterator[ThreadPoolExecutor]:
+    """Driver threads for the build's independent Spark jobs.  On any
+    failure, queued work is cancelled and running jobs are waited for,
+    so the exception leaves no pool thread or job behind."""
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        try:
+            yield pool
+        except BaseException:
+            pool.shutdown(cancel_futures=True)
+            raise
+
+
 @dataclass
 class BuildResult:
     out_dir: str
@@ -69,7 +88,6 @@ def build_training_set(
     token_budget: int = C.TOKEN_BUDGET,
     benchmark: DataFrame | None = None,
     lsh_bucket_cap: int = LSH_BUCKET_CAP,
-    lsh_audit: bool = True,
     normalize_urls: bool = False,
     classifier_seed: DataFrame | None = None,
     classifier_min_micro: int = 0,
@@ -92,15 +110,13 @@ def build_training_set(
 
     `lsh_bucket_cap` is applied to the dedup stage's pair expansion AND
     to the occupancy audit, so the audit always reports on the cap the
-    pair stage actually enforced.  `lsh_audit=False` skips the audit
-    pass (and its two lineage rows) when the extra signature pass is
-    not worth the observability — e.g. repeated small test builds.
+    pair stage actually enforced.
 
     Returns BuildResult with the split paths and the lineage table;
     splits are written with (url, text, n_tokens) columns.  Lineage has
     two row families: `NN_*` document counts (monotone non-increasing
-    through the stages) and, when `lsh_audit`, `6N_lsh_*` audit gauges
-    (over-cap bucket count and max bucket size — NOT document counts).
+    through the stages) and the `6N_lsh_*` audit gauges (over-cap
+    bucket count and max bucket size — NOT document counts).
     """
     # 1. quality filter with both curation passes (+ optional url
     # canonicalization ahead of the re-crawl window — when on, every
@@ -113,90 +129,73 @@ def build_training_set(
     # independent (content-hash membership), so this changes no rows.
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    # the 00_input lineage count (distinct urls of the raw input) is
-    # independent of every stage — run it from a driver thread so its
-    # scan back-fills executors behind the pipeline's stragglers
-    # (guide §2.6) instead of serializing at the end
-    from concurrent.futures import ThreadPoolExecutor
-
-    _pool = ThreadPoolExecutor(max_workers=4)
-    _fut_input = _pool.submit(
-        lambda: spark.read.parquet(pages_path).select("url").distinct().count()
-    )
-    decided = run_pipeline(
-        spark,
-        pages_path,
-        num_partitions=num_partitions,
-        strip_boilerplate=True,
-        host_gate=True,
-        normalize_urls=normalize_urls,
-    ).decided
-    kept = decided.filter("keep").select("url", "text")
-    # the chain is re-used by several counting/writing consumers below;
-    # materialize once (the CTAS-at-fan-out discipline).  Same for the
-    # dedup and decontamination survivors: without their checkpoints
-    # the lineage counts at the bottom re-executed the LSH + connected-
-    # components chain and the decontamination join a second and third
-    # time (round-4 advisory — measured as the build's dominant
-    # redundant cost at scale).
-    kept = kept.localCheckpoint(eager=True)
-    quality_kept = kept  # pre-gate frame: stage-10 lineage counts this
-
-    # 1b. optional model-based gate (the CCNet/GPT-3 classifier layer):
-    # train closed-form NB log-odds on the caller's labeled seed
-    # (columns: text, y boolean — True = quality reference, False =
-    # raw-crawl negatives) and keep docs scoring above the threshold.
-    # Runs BEFORE the near-dup stage on purpose: scoring is a
-    # zero-shuffle broadcast-map pass (a free rider on the kept scan),
-    # while LSH + connected components is the build's most expensive
-    # stage — gating first shrinks its input.  score_micro is an exact
-    # BIGINT, so the kept set is bit-stable at any parallelism.
-    classifier_count: dict[str, int] = {}
-    if classifier_seed is not None:
-        weights, consts = train_nb_weights(
-            classifier_seed, text_col="text", label_col="y"
+    with _driver_pool() as pool:
+        # the 00_input lineage count (distinct urls of the raw input) is
+        # independent of every stage — run it from a driver thread so its
+        # scan back-fills executors behind the pipeline's stragglers
+        # (guide §2.6) instead of serializing at the end
+        _fut_input = pool.submit(
+            lambda: spark.read.parquet(pages_path).select("url").distinct().count()
         )
-        kept = (
-            nb_score(kept, weights, consts, text_col="text", id_cols=("url", "text"))
-            .filter(F.col("score_micro") > classifier_min_micro)
-            .select("url", "text")
-            .localCheckpoint(eager=True)
-        )
-        classifier_count["15_classifier_kept"] = kept.count()
+        decided = run_pipeline(
+            spark,
+            pages_path,
+            num_partitions=num_partitions,
+            strip_boilerplate=True,
+            host_gate=True,
+            normalize_urls=normalize_urls,
+        ).decided
+        kept = decided.filter("keep").select("url", "text")
+        # the chain is re-used by several counting/writing consumers below;
+        # materialize once (the CTAS-at-fan-out discipline).  Same for the
+        # dedup and decontamination survivors: without their checkpoints
+        # the lineage counts at the bottom re-executed the LSH + connected-
+        # components chain and the decontamination join a second and third
+        # time (round-4 advisory — measured as the build's dominant
+        # redundant cost at scale).
+        kept = kept.localCheckpoint(eager=True)
+        quality_kept = kept  # pre-gate frame: stage-10 lineage counts this
 
-    # 2. near-dup removal: keep each cluster's min-id representative.
-    # When auditing, the resolution shares ONE materialized bucket
-    # table between pair generation and the occupancy stats (round-6:
-    # the audit previously re-ran exact_representatives + the whole
-    # signature UDF pass a second time — the build's largest redundant
-    # cost; the shared table is ids-only, so the checkpoint is cheap
-    # and the audited cap is by construction the cap the pair stage
-    # enforced).
-    stats = None
-    if lsh_audit:
-        labels, stats = dedup_resolution(
-            kept, "url", "text", bucket_cap=lsh_bucket_cap,
-            with_bucket_stats=True, rebalance=False,
-        )
-    else:
-        labels = dedup_resolution(
-            kept, "url", "text", bucket_cap=lsh_bucket_cap, rebalance=False
-        )
-    non_reps = (
-        labels.filter(F.col("node") != F.col("cluster"))
-        .select(F.col("node").alias("url"))
-    )
-    deduped = kept.join(non_reps, "url", "left_anti").localCheckpoint(eager=True)
+        # 1b. optional model-based gate (the CCNet/GPT-3 classifier layer):
+        # train closed-form NB log-odds on the caller's labeled seed
+        # (columns: text, y boolean — True = quality reference, False =
+        # raw-crawl negatives) and keep docs scoring above the threshold.
+        # Runs BEFORE the near-dup stage on purpose: scoring is a
+        # zero-shuffle broadcast-map pass (a free rider on the kept scan),
+        # while LSH + connected components is the build's most expensive
+        # stage — gating first shrinks its input.  score_micro is an exact
+        # BIGINT, so the kept set is bit-stable at any parallelism.
+        classifier_count: dict[str, int] = {}
+        if classifier_seed is not None:
+            weights, consts = train_nb_weights(
+                classifier_seed, text_col="text", label_col="y"
+            )
+            kept = (
+                nb_score(kept, weights, consts, text_col="text", id_cols=("url", "text"))
+                .filter(F.col("score_micro") > classifier_min_micro)
+                .select("url", "text")
+                .localCheckpoint(eager=True)
+            )
+            classifier_count["15_classifier_kept"] = kept.count()
 
-    # 2b. occupancy audit gauges (see above: measured over the exact-
-    # dedup representative set the pair stage consumed).  The bucket
-    # table is already materialized at this point, so the histogram
-    # aggregation is independent of everything downstream — submit it
-    # from a driver thread (guide §2.6) and collect the row when the
-    # lineage is assembled.
-    _fut_audit = None
-    if lsh_audit:
-        _fut_audit = _pool.submit(
+        # 2. near-dup removal: keep each cluster's min-id representative.
+        # The resolution shares ONE materialized ids-only bucket table
+        # between pair generation and the occupancy stats, so the audited
+        # cap is by construction the cap the pair stage enforced.
+        labels, stats = dedup_resolution(kept, "url", "text", bucket_cap=lsh_bucket_cap)
+        non_reps = (
+            labels.filter(F.col("node") != F.col("cluster"))
+            .select(F.col("node").alias("url"))
+        )
+        deduped = kept.join(non_reps, "url", "left_anti").localCheckpoint(eager=True)
+
+        # 2b. occupancy audit gauges (see above: measured over the exact-
+        # dedup representative set the pair stage consumed).  The bucket
+        # table is already materialized at this point, so the histogram
+        # aggregation is independent of everything downstream — submit it
+        # from a driver thread (guide §2.6) and collect the row when the
+        # lineage is assembled.
+        _fut_audit = pool.submit(
             lambda: stats.agg(
                 F.coalesce(
                     F.sum(F.when(F.col("over_cap"), F.col("n_buckets"))), F.lit(0)
@@ -205,66 +204,60 @@ def build_training_set(
             ).collect()[0]
         )
 
-    # 3. decontamination
-    if benchmark is None:
-        bench_docs = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) == 0)
-        benchmark = C.benchmark_grams(bench_docs, "text")
-        candidates = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) != 0)
-    else:
-        candidates = deduped
-    hits = C.decontaminate(candidates, "url", "text", benchmark=benchmark)
-    clean = candidates.join(hits.select("url"), "url", "left_anti").localCheckpoint(
-        eager=True
-    )
+        # 3. decontamination
+        if benchmark is None:
+            bench_docs = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) == 0)
+            benchmark = C.benchmark_grams(bench_docs, "text")
+            candidates = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) != 0)
+        else:
+            candidates = deduped
+        hits = C.decontaminate(candidates, "url", "text", benchmark=benchmark)
+        clean = candidates.join(hits.select("url"), "url", "left_anti").localCheckpoint(
+            eager=True
+        )
 
-    # 4. per-host token budget (host = authority component of the url)
-    hosted = clean.withColumn("host", F.substring_index("url", "/", 3))
-    sampled = C.token_budget_sample(
-        hosted, "url", "text", "host", budget=token_budget
-    ).select("url", "n_tokens")
-    final = clean.join(sampled, "url").localCheckpoint(eager=True)
+        # 4. per-host token budget (host = authority component of the url)
+        hosted = clean.withColumn("host", F.substring_index("url", "/", 3))
+        sampled = C.token_budget_sample(
+            hosted, "url", "text", "host", budget=token_budget
+        ).select("url", "n_tokens")
+        final = clean.join(sampled, "url").localCheckpoint(eager=True)
 
-    # 5. train/val/test split: md5(url) buckets (98/1/1), a pure
-    # function of the url — stable across reruns and cluster sizes.
-    # Leakage: EXACT-duplicate content cannot straddle splits because
-    # the upstream exact-dedup stage collapses identical text to one
-    # survivor regardless of url; near-duplicates above the LSH
-    # threshold are likewise collapsed to one representative.  The
-    # residual risk — near-identical content BELOW the similarity
-    # threshold (or too short to shingle) surviving under different
-    # urls — straddles with probability proportional to the bucket
-    # split, and no split key fixes that (a content hash differs on
-    # near-identical text too); only a tighter dedup threshold does.
-    bucket = _hash_bucket("url", 1000)
-    split = (
-        F.when(bucket < 980, "train").when(bucket < 990, "val").otherwise("test")
-    )
-    final = final.withColumn("split", split)
-    final.write.mode("overwrite").partitionBy("split").parquet(out_dir)
+        # 5. train/val/test split: md5(url) buckets (98/1/1), a pure
+        # function of the url — stable across reruns and cluster sizes.
+        # Leakage: EXACT-duplicate content cannot straddle splits because
+        # the upstream exact-dedup stage collapses identical text to one
+        # survivor regardless of url; near-duplicates above the LSH
+        # threshold are likewise collapsed to one representative.  The
+        # residual risk — near-identical content BELOW the similarity
+        # threshold (or too short to shingle) surviving under different
+        # urls — straddles with probability proportional to the bucket
+        # split, and no split key fixes that (a content hash differs on
+        # near-identical text too); only a tighter dedup threshold does.
+        bucket = _hash_bucket("url", 1000)
+        split = (
+            F.when(bucket < 980, "train").when(bucket < 990, "val").otherwise("test")
+        )
+        final = final.withColumn("split", split)
+        final.write.mode("overwrite").partitionBy("split").parquet(out_dir)
 
-    # every stage frame is checkpointed/written at this point, so the
-    # five lineage counts are independent tiny jobs — run them
-    # concurrently (guide §2.6: back-fill, don't serialize)
-    stage_frames = {
-        "10_quality_kept": quality_kept,
-        "20_after_dedup": deduped,
-        "30_after_decontam": clean,
-        "40_after_budget": final,
-        "50_written": spark.read.parquet(out_dir),
-    }
-    count_futs = {k: _pool.submit(df.count) for k, df in stage_frames.items()}
-    counts = {"00_input": _fut_input.result()}
-    counts.update({k: f.result() for k, f in count_futs.items()})
-    counts.update(classifier_count)
-    audit: dict[str, int] = {}
-    if _fut_audit is not None:
-        row = _fut_audit.result()
-        audit = {
-            "60_lsh_over_cap_buckets": row.n_over,
-            "61_lsh_max_bucket_size": row.max_size,
+        # every stage frame is checkpointed/written at this point, so the
+        # five lineage counts are independent tiny jobs — run them
+        # concurrently (guide §2.6: back-fill, don't serialize)
+        stage_frames = {
+            "10_quality_kept": quality_kept,
+            "20_after_dedup": deduped,
+            "30_after_decontam": clean,
+            "40_after_budget": final,
+            "50_written": spark.read.parquet(out_dir),
         }
-    counts.update(audit)
-    _pool.shutdown()
+        count_futs = {k: pool.submit(df.count) for k, df in stage_frames.items()}
+        counts = {"00_input": _fut_input.result()}
+        counts.update({k: f.result() for k, f in count_futs.items()})
+        counts.update(classifier_count)
+        row = _fut_audit.result()
+        counts["60_lsh_over_cap_buckets"] = row.n_over
+        counts["61_lsh_max_bucket_size"] = row.max_size
     lineage = spark.createDataFrame(
         sorted(counts.items()), "stage string, n_docs long"
     )

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wtq.operators.text import words_arr
+
 # ---- shared constants (Spark AND oracle SQL are generated from these) ----
 DECONTAM_K = 13          # n-gram size, the C4/GPT-3 decontamination convention
 BENCH_MOD = 7            # doc_id % BENCH_MOD == 0 → doc seeds the benchmark set
@@ -56,16 +58,10 @@ GATE_STOPWORD_MIN = 0.0575  # host-level stopword fraction below this → drop
                             # doubles would depend on reduction order)
 
 
-def _words(col):
-    """Whitespace tokens, empties removed — mirrors DuckDB
-    list_filter(string_split(text,' '), x -> x <> '')."""
-    return F.filter(F.split(col, " "), lambda x: x != "")
-
-
 def benchmark_grams(bench_df: DataFrame, text_col: str = "text") -> DataFrame:
     """All 13-gram md5 digests of a benchmark corpus — the side input
     `decontaminate` joins against.  Column: g (md5 hex)."""
-    ws = bench_df.select(_words(F.col(text_col)).alias("ws")).filter(
+    ws = bench_df.select(words_arr(F.col(text_col)).alias("ws")).filter(
         F.size("ws") >= DECONTAM_K
     )
     return ws.select(
@@ -107,7 +103,7 @@ def decontaminate(
     bit-identical in both engines.
     """
     ws = df.select(
-        F.col(id_col).alias("doc"), _words(F.col(text_col)).alias("ws")
+        F.col(id_col).alias("doc"), words_arr(F.col(text_col)).alias("ws")
     ).filter(F.size("ws") >= DECONTAM_K)
     if benchmark is None:
         bench = (
@@ -250,7 +246,7 @@ def token_budget_sample(
     d = df.select(
         F.col(id_col).alias("doc"),
         F.col(host_col).alias("host"),
-        F.size(_words(F.col(text_col))).cast("long").alias("n_tokens"),
+        F.size(words_arr(F.col(text_col))).cast("long").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("host")
@@ -317,7 +313,7 @@ def source_quality_gate(
     stop_list = sorted(STOPWORDS)
     d = df.select(
         F.col(host_col).alias("host"),
-        _words(F.col(text_col)).alias("ws"),
+        words_arr(F.col(text_col)).alias("ws"),
     ).select(
         "host",
         F.size("ws").alias("n_words"),

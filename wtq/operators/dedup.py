@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from wtq.operators.text import _sql_words, words_arr
+
 # ---- shared constants (Spark AND oracle SQL are generated from these) ----
 MINHASH_P = 2147483647  # 2^31-1 (Mersenne prime): a*h < 2^62 — no int64 overflow
                         # under Spark's ANSI arithmetic or DuckDB BIGINT
@@ -48,20 +50,6 @@ PERM_B = [(i * 40503 + 17) % MINHASH_P for i in range(1, N_PERM + 1)]
 # ---------------------------------------------------------------------------
 # Spark-side building blocks
 # ---------------------------------------------------------------------------
-
-def token_hash(col: Column) -> Column:
-    """60-bit integer hash of a string via md5 hex → mod 2^32-5 prime.
-    `conv(substr(md5(x),1,15),16,10)` is exactly reproducible in the
-    DuckDB oracle as `cast('0x'||substr(md5(x),1,15) as bigint)`."""
-    return (
-        F.conv(F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15), 16, 10).cast("long")
-        % MINHASH_P
-    )
-
-
-def words_arr(text: Column) -> Column:
-    return F.filter(F.split(text, " "), lambda w: w != "")
-
 
 def shingles_arr(text: Column, k: int = SHINGLE_K) -> Column:
     """k-word shingles via index-transform over the word array —
@@ -142,13 +130,7 @@ def _sig_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(_sig_batch(texts))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_partitions: int | None = None,
-    rebalance: bool = True,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, sig array<long>[N_PERM]): per-permutation min over shingle
     hashes of (a·h+b) mod P.
 
@@ -162,24 +144,11 @@ def minhash_signatures(
     arithmetic bit-for-bit from the SQL-visible md5.  Docs with no
     shingle get sentinel MINHASH_P (real minvals are always < P).
     """
-    # rebalance: signature compute is the heavy narrow stage, and a
-    # single giant input split would serialize it.  Exactly one split
-    # per core — over-splitting (4× was measured) doubles wall time at
-    # this batch size from per-task Arrow/scheduling overhead.
-    # Round-6: callers whose input is ALREADY split at least core-wide
-    # (the registry rebalance, the build's checkpointed kept set) pass
-    # rebalance=False and skip the exchange — it only re-moved every
-    # text.  The skip is a caller-declared flag, NOT runtime
-    # introspection: df.rdd.getNumPartitions() on an AQE plan that
-    # contains an exchange EXECUTES that exchange stage to finalize
-    # the plan, paying the shuffle twice (measured as a regression
-    # before this flag).
-    base = df.select(F.col(id_col), F.col(text_col))
-    if rebalance:
-        base = base.repartition(
-            num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        )
-    return base.select(F.col(id_col), _sig_udf(F.col(text_col)).alias("sig"))
+    # No input repartition: every caller's input is already split at
+    # least core-wide (the registry's rebalanced scan, the build's
+    # checkpointed kept set), and a round-robin exchange here only
+    # re-moved every text.
+    return df.select(F.col(id_col), _sig_udf(F.col(text_col)).alias("sig"))
 
 
 def _band_strs() -> Column:
@@ -225,7 +194,6 @@ def minhash_lsh_pairs(
     id_col: str,
     text_col: str,
     bucket_cap: int = LSH_BUCKET_CAP,
-    rebalance: bool = True,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banding: docs sharing ALL row
     minvalues in ≥1 band.  Returns (doc1, doc2, n_shared_bands) with
@@ -238,12 +206,13 @@ def minhash_lsh_pairs(
     preserved exactly; `sql_minhash_lsh_pairs` mirrors the cap and the
     star rule so both engines emit exactly the same pairs."""
     # NOTE: do NOT filter on the signature column here — a filter
-    # referencing the UDF output gets pushed below the repartition and
-    # Catalyst materializes a SECOND ArrowEvalPython over the unsplit
-    # scan (measured: the whole signature pass re-ran serially).
+    # referencing the UDF output gets pushed below the caller's input
+    # exchange and Catalyst materializes a SECOND ArrowEvalPython over
+    # the unsplit scan (measured: the whole signature pass re-ran
+    # serially).
     # Shingle-less docs are dropped at the bucket level instead, where
     # the Generate node blocks pushdown.
-    buckets = _minhash_buckets(df, id_col, text_col, rebalance=rebalance)
+    buckets = _minhash_buckets(df, id_col, text_col)
     # Within-bucket pairs via ONE aggregation + double explode instead
     # of a bucket self-join: a self-join duplicates the whole upstream
     # subtree, so the signature UDF would run TWICE (measured 2× the
@@ -276,10 +245,9 @@ def minhash_lsh_pairs(
 
 def _pairs_from_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
     """Pair generation over a (doc, bucket) table — the back half of
-    minhash_lsh_pairs, factored out (round-6) so a caller that also
-    audits occupancy (wtq/build.py) can feed BOTH consumers from one
-    materialized bucket table instead of running the signature UDF
-    twice.
+    minhash_lsh_pairs, factored out so dedup_resolution can feed pair
+    generation AND its occupancy audit from one materialized bucket
+    table instead of running the signature UDF twice.
 
     One conditional explode handles both regimes without touching
     the upstream subtree twice: the LEFT side of the pair is every
@@ -307,9 +275,7 @@ def _pairs_from_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
     return pairs
 
 
-def _minhash_buckets(
-    df: DataFrame, id_col: str, text_col: str, rebalance: bool = True
-) -> DataFrame:
+def _minhash_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc, bucket) band-bucket rows — the shared derivation behind
     pair generation AND the occupancy audit (one definition, so the
     audit always reports on exactly the buckets pairing builds).
@@ -319,7 +285,7 @@ def _minhash_buckets(
     dropping those buckets removes them from pairing entirely (the
     explode-form oracle simply emits no rows for such docs).  Still
     narrow: the ONLY shuffle in the operator is downstream of this."""
-    sig = minhash_signatures(df, id_col, text_col, rebalance=rebalance)
+    sig = minhash_signatures(df, id_col, text_col)
     sentinel_bucket = ":" + ",".join([str(MINHASH_P)] * LSH_ROWS)
     return sig.select(
         F.col(id_col).alias("doc"), F.explode(_band_strs()).alias("bucket")
@@ -342,8 +308,7 @@ def lsh_bucket_stats(
 
 def _bucket_stats_from_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
     """Occupancy histogram over a (doc, bucket) table — shared by the
-    standalone audit above and the single-signature-pass resolution
-    path (round-6)."""
+    standalone audit above and dedup_resolution."""
     return (
         buckets.groupBy("bucket")
         .agg(F.count("*").alias("bucket_size"))
@@ -589,55 +554,23 @@ def connected_components(
     return labels.select(F.col("node"), F.col("label").alias("cluster"))
 
 
-def exact_representatives(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One representative document (min id) per md5 text fingerprint —
-    the exact-dedup-first front half of `dedup_resolution`, exposed so
-    observability consumers (the build lineage's LSH occupancy audit,
-    wtq/build.py) can measure the EXACT document set the LSH stage
-    sees.  Auditing the raw corpus instead would report over-cap
-    buckets that the exact collapse already defused (10⁵ byte-identical
-    pages = ONE doc per band bucket), which misleads production triage.
-
-    Deliberately mirrors (not shares) dedup_resolution's interior: the
-    resolution path checkpoints its fingerprint-group table because two
-    downstream consumers reuse it; this standalone form has one
-    consumer and a checkpoint would just pin memory."""
-    docs = df.select(
-        F.col(id_col),
-        F.col(text_col),
-        F.md5(F.encode(F.col(text_col), "UTF-8")).alias("__fp"),
-    )
-    multi = (
-        docs.groupBy("__fp")
-        .agg(F.min(id_col).alias("__rep"), F.count("*").alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("__fp", "__rep")
-    )
-    return (
-        docs.join(multi, "__fp", "left")
-        .filter(F.col("__rep").isNull() | (F.col(id_col) == F.col("__rep")))
-        .select(id_col, text_col)
-    )
-
-
 def dedup_resolution(
     df: DataFrame,
     id_col: str,
     text_col: str,
     bucket_cap: int = LSH_BUCKET_CAP,
-    with_bucket_stats: bool = False,
-    rebalance: bool = True,
-):
-    """Per-document cluster assignment (node, cluster) with
-    EXACT-DEDUP-FIRST discipline: byte-identical documents are
+) -> tuple[DataFrame, DataFrame]:
+    """Per-document cluster assignment plus its LSH occupancy audit,
+    returned as ``(labels, stats)``.
+
+    `labels` is (node, cluster) with EXACT-DEDUP-FIRST discipline:
+    byte-identical documents are
     collapsed to one representative per md5 fingerprint BEFORE the LSH
     stage, so a corpus with 10⁵ identical boilerplate pages puts ONE
     doc — not 10⁵ — into each band bucket (bounded collect_list,
     linear not quadratic).  Exact-dup members are re-attached to their
-    representative's cluster afterwards.  `bucket_cap` rides through to
-    minhash_lsh_pairs (callers auditing occupancy via lsh_bucket_stats
-    must pass the SAME cap, or the audit reports on a cap the pair
-    stage never applied).
+    representative's cluster afterwards.  `bucket_cap` is the pair
+    stage's cap (see minhash_lsh_pairs).
 
     Semantics: the same components as running LSH over the full corpus
     PLUS an edge between every exact duplicate and its group minimum —
@@ -649,11 +582,10 @@ def dedup_resolution(
     silently missed them.  Output covers exactly the docs in a cluster
     of ≥ 2 (pair-connected or fingerprint-connected).
 
-    ``with_bucket_stats=True`` returns ``(labels, stats)`` where
-    ``stats`` is the lsh_bucket_stats occupancy histogram over the
-    SAME representative bucket table the pair stage consumed — the
-    build's audit then costs one materialized ids-only bucket table
-    instead of a second full signature pass (round-6)."""
+    `stats` is the lsh_bucket_stats occupancy histogram over the SAME
+    representative bucket table the pair stage consumed, flagged
+    against the SAME `bucket_cap`: the audit costs one materialized
+    ids-only bucket table instead of a second signature pass."""
     docs = df.select(
         F.col(id_col).alias("node"),
         F.col(text_col).alias("__text"),
@@ -689,20 +621,12 @@ def dedup_resolution(
         .filter(F.col("rep").isNull() | (F.col("node") == F.col("rep")))
         .select(F.col("node").alias(id_col), F.col("__text").alias(text_col))
     )
-    stats = None
-    if with_bucket_stats:
-        # ONE signature pass feeds pairing AND the occupancy audit:
-        # the (doc, bucket) table is ids-only (~8 short rows per rep),
-        # so the checkpoint is cheap and both consumers read it
-        buckets = _minhash_buckets(
-            reps, id_col, text_col, rebalance=rebalance
-        ).localCheckpoint(eager=True)
-        pairs = _pairs_from_buckets(buckets, bucket_cap)
-        stats = _bucket_stats_from_buckets(buckets, bucket_cap)
-    else:
-        pairs = minhash_lsh_pairs(
-            reps, id_col, text_col, bucket_cap=bucket_cap, rebalance=rebalance
-        )
+    # ONE signature pass feeds pairing AND the occupancy audit: the
+    # (doc, bucket) table is ids-only (~8 short rows per rep), so the
+    # checkpoint is cheap and both consumers read it
+    buckets = _minhash_buckets(reps, id_col, text_col).localCheckpoint(eager=True)
+    pairs = _pairs_from_buckets(buckets, bucket_cap)
+    stats = _bucket_stats_from_buckets(buckets, bucket_cap)
     cc = connected_components(pairs).select(
         F.col("node").alias("rep"), F.col("cluster").alias("cc_cluster")
     )
@@ -723,21 +647,17 @@ def dedup_resolution(
         .filter(F.col("cc_cluster").isNotNull() | (F.col("n_fp") >= 2))
         .select("node", F.coalesce("cc_cluster", "rep").alias("cluster"))
     )
-    if with_bucket_stats:
-        return labels, stats
-    return labels
+    return labels, stats
 
 
-def dedup_clusters(
-    df: DataFrame, id_col: str, text_col: str, rebalance: bool = True
-) -> DataFrame:
+def dedup_clusters(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Near-dup clusters over MinHash-LSH pairs: one row per cluster
     with its representative (min id), member count, and sorted member
     list — the keep-one-representative contract of a dedup pass.
     Exact-dedup-first via dedup_resolution (see its docstring)."""
-    cc = dedup_resolution(df, id_col, text_col, rebalance=rebalance)
+    labels, _ = dedup_resolution(df, id_col, text_col)
     return (
-        cc.groupBy("cluster")
+        labels.groupBy("cluster")
         .agg(
             F.count("*").alias("n_docs"),
             F.array_join(F.array_sort(F.collect_list(F.col("node").cast("string"))), ",").alias("members"),
@@ -824,9 +744,7 @@ def _simhash_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(_simhash_batch(texts))
 
 
-def simhash(
-    df: DataFrame, id_col: str, text_col: str, rebalance: bool = True
-) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """60-bit multiplicity-weighted shingle SimHash per document.
 
     One Arrow-batched numpy pass — a narrow map, no shuffle at all.
@@ -835,20 +753,13 @@ def simhash(
     rows and was retired from the execution path in round 2; it
     survives verbatim as the DuckDB oracle (sql_simhash), which checks
     this implementation bit-for-bit."""
-    # same caller-declared rebalance flag as minhash_signatures (round-6)
-    base = df.select(F.col(id_col), F.col(text_col))
-    if rebalance:
-        base = base.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return base.select(F.col(id_col), _simhash_udf(F.col(text_col)).alias("simhash"))
+    # no input repartition, for the reason given in minhash_signatures
+    return df.select(F.col(id_col), _simhash_udf(F.col(text_col)).alias("simhash"))
 
 
 # ---------------------------------------------------------------------------
 # Oracle SQL builders (DuckDB) — generated from the SAME constants
 # ---------------------------------------------------------------------------
-
-def _sql_words(text: str) -> str:
-    return f"list_filter(string_split({text}, ' '), x -> x <> '')"
-
 
 def _sql_shingles(text: str, k: int = SHINGLE_K) -> str:
     w = _sql_words(text)
@@ -1025,7 +936,6 @@ def simhash_near_pairs(
     id_col: str,
     text_col: str,
     bucket_cap: int = LSH_BUCKET_CAP,
-    rebalance: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash banding: candidates share one
     SIMHASH_BAND_BITS-bit chunk (6 bands × 10 bits — equi-join, never
@@ -1051,7 +961,7 @@ def simhash_near_pairs(
     whose ONLY links route through a far-from-min member, cluster
     recall degrades too.  The oracle applies the identical cap and
     star rule."""
-    sig = simhash(df, id_col, text_col, rebalance=rebalance).select(
+    sig = simhash(df, id_col, text_col).select(
         F.col(id_col).alias("doc"), F.col("simhash")
     )
     # NULL signature = "no shingles" (out-of-band: a computable 0 is a
@@ -1060,8 +970,8 @@ def simhash_near_pairs(
     # turning it into a corpus-sized collect_list.  The exclusion
     # lives INSIDE the generator expression (explode(NULL) emits no
     # rows): a plain filter on the UDF column would be pushed below
-    # the repartition and duplicate the whole Arrow pass (plan-shape
-    # test gates this).
+    # the caller's input exchange and duplicate the whole Arrow pass
+    # (plan-shape test gates this).
     band_array = F.array(*[
         F.struct(
             F.lit(j).alias("band"),

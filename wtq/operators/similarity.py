@@ -33,19 +33,15 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def brute_force_topk(
     emb: DataFrame, queries: DataFrame, k: int = 3, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """Top-k cosine neighbors per query vector (self excluded).
     The small query side is broadcast — no shuffle of the big side."""
     # norms precomputed per side (round-6): cos = dot/(q_norm·n_norm)
-    # is the same expressions over the same doubles as the inline
-    # cosine — bit-identical — but each row's norm folds once instead
-    # of once per candidate pair
+    # is the same expressions over the same doubles as an inline
+    # dot/(norm·norm) — bit-identical — but each row's norm folds once
+    # instead of once per candidate pair
     q = queries.select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),

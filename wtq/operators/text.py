@@ -25,17 +25,9 @@ _MARKER_LANGS = ("en", "fr", "es", "de")
 
 
 def words_arr(text: Column) -> Column:
+    """Whitespace tokens, empties removed — the one Spark tokenization
+    every word-level operator shares; `_sql_words` is its DuckDB twin."""
     return F.filter(F.split(text, " "), lambda w: w != "")
-
-
-def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Whitespace tokens + BPE-ish regex tokens per document."""
-    t = F.col(text_col)
-    return df.select(
-        F.col(id_col),
-        F.size(words_arr(t)).alias("ws_tokens"),
-        F.size(F.regexp_extract_all(t, F.lit(BPE_TOKEN_RE), 0)).alias("bpe_tokens"),
-    )
 
 
 def _stat_cols(t: Column) -> dict[str, Column]:
@@ -51,22 +43,6 @@ def _stat_cols(t: Column) -> dict[str, Column]:
         "stopword_frac": F.size(F.filter(words, lambda w: F.lower(w).isin(*stop_list))).cast("double") / nw,
         "symbol_frac": (F.length(t) - F.length(F.regexp_replace(t, "[#$%&*+<=>@^_|~]", ""))).cast("double") / nw,
     }
-
-
-def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Composite linear quality score in [0,1]-ish (pure arithmetic —
-    bit-reproducible in any engine)."""
-    s = _stat_cols(F.col(text_col))
-    score = (
-        s["stopword_frac"] * 0.5
-        + (F.lit(1.0) - F.least(s["symbol_frac"], F.lit(1.0))) * 0.3
-        + (F.lit(1.0) - F.least(F.abs(s["mean_word_len"] - 5.0) / 5.0, F.lit(1.0))) * 0.2
-    )
-    return df.select(
-        F.col(id_col),
-        s["n_words"].alias("n_words"),
-        F.round(score, 6).alias("quality_score"),
-    )
 
 
 def lang_markers(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -94,9 +70,8 @@ def lang_markers(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def text_metrics(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Token counts + composite quality score + content fingerprint in
     ONE scan/projection — the columns a curation run actually wants
-    side by side per document.  Consolidates the former token_counts /
-    quality_score / fingerprints registry demos (50-entry driver cap);
-    the standalone operators remain the public API."""
+    side by side per document.  Fingerprint = md5 of the lowercase
+    whitespace-normalized text."""
     t = F.col(text_col)
     s = _stat_cols(t)
     score = (
@@ -114,28 +89,13 @@ def text_metrics(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Deterministic content fingerprint (md5 of lowercase
-    whitespace-normalized text)."""
-    norm = F.array_join(words_arr(F.lower(F.col(text_col))), " ")
-    return df.select(F.col(id_col), F.md5(F.encode(norm, "UTF-8")).alias("fp"))
-
-
 # ---------------------------------------------------------------------------
 # Oracle SQL builders (DuckDB)
 # ---------------------------------------------------------------------------
 
 def _sql_words(text: str) -> str:
+    """DuckDB twin of `words_arr`."""
     return f"list_filter(string_split({text}, ' '), x -> x <> '')"
-
-
-def sql_token_counts(table: str, id_col: str, text_col: str) -> str:
-    return f"""
-    SELECT {id_col},
-           CAST(len({_sql_words(text_col)}) AS INT) AS ws_tokens,
-           CAST(len(regexp_extract_all({text_col}, '{BPE_TOKEN_RE}')) AS INT) AS bpe_tokens
-    FROM {table}
-    """
 
 
 def _sql_stats(text_col: str) -> dict[str, str]:
@@ -147,21 +107,6 @@ def _sql_stats(text_col: str) -> dict[str, str]:
         "stopword_frac": f"CAST(len(list_filter({w}, x -> list_contains([{stop_list}], lower(x)))) AS DOUBLE) / greatest(len({w}), 1)",
         "symbol_frac": f"CAST(length({text_col}) - length(regexp_replace({text_col}, '[#$%&*+<=>@^_|~]', '', 'g')) AS DOUBLE) / greatest(len({w}), 1)",
     }
-
-
-def sql_quality_score(table: str, id_col: str, text_col: str) -> str:
-    s = _sql_stats(text_col)
-    # coalesce(list_sum(...), 0) — DuckDB list_sum of empty list is NULL
-    mean = f"coalesce({s['mean_word_len']}, 0.0)"
-    score = (
-        f"{s['stopword_frac']} * 0.5"
-        f" + (1.0 - least({s['symbol_frac']}, 1.0)) * 0.3"
-        f" + (1.0 - least(abs({mean} - 5.0) / 5.0, 1.0)) * 0.2"
-    )
-    return f"""
-    SELECT {id_col}, CAST({s['n_words']} AS INT) AS n_words, round({score}, 6) AS quality_score
-    FROM {table}
-    """
 
 
 def sql_lang_markers(table: str, id_col: str, text_col: str) -> str:
@@ -197,13 +142,6 @@ def sql_text_metrics(table: str, id_col: str, text_col: str) -> str:
            round({score}, 6) AS quality_score,
            md5(array_to_string({w_norm}, ' ')) AS fp
     FROM {table}
-    """
-
-
-def sql_fingerprints(table: str, id_col: str, text_col: str) -> str:
-    w = _sql_words(f"lower({text_col})")
-    return f"""
-    SELECT {id_col}, md5(array_to_string({w}, ' ')) AS fp FROM {table}
     """
 
 

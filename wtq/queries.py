@@ -663,10 +663,6 @@ GROUP BY word ORDER BY cnt DESC, word LIMIT 20
 # of the pipeline's rule battery)
 # ---------------------------------------------------------------------------
 
-def _doc_words(t):
-    return F.filter(F.split(t, " "), lambda w: w != "")
-
-
 def q_rule_metrics(spark, sf_dir):
     """The three per-document scalar quality rules (word-count bounds,
     stopword density, mean word length — the Gopher/C4 rule family) in
@@ -677,7 +673,7 @@ def q_rule_metrics(spark, sf_dir):
     separate: it is a different physical shape (explode + two-level
     agg), not a scalar projection."""
     d = _t(spark, sf_dir, "documents")
-    words = _doc_words(F.col("text"))
+    words = X.words_arr(F.col("text"))
     n = F.size(words)
     nw = F.greatest(n, F.lit(1))
     # isin → codegen InSet hash lookup (round-6; value-identical to the
@@ -727,7 +723,7 @@ def q_rule_top_word(spark, sf_dir):
     """Per-doc mode via explode + two-level agg (the scalable form of
     the repeated-content rule — A6 pattern per document)."""
     d = _t(spark, sf_dir, "documents")
-    w = d.select("doc_id", F.explode(_doc_words(F.col("text"))).alias("word"))
+    w = d.select("doc_id", F.explode(X.words_arr(F.col("text"))).alias("word"))
     counts = w.groupBy("doc_id", "word").agg(F.count("*").alias("cnt"))
     per_doc = counts.groupBy("doc_id").agg(
         (F.max("cnt").cast("double") / F.sum("cnt")).alias("frac")
@@ -753,7 +749,7 @@ def q_doc_decisions(spark, sf_dir):
     """Single-pass rule battery + err_all rollup on documents (U3 note:
     all CASEs evaluated in one scan, codes joined as one string)."""
     d = _t(spark, sf_dir, "documents")
-    words = _doc_words(F.col("text"))
+    words = X.words_arr(F.col("text"))
     n = F.size(words)
     nw = F.greatest(n, F.lit(1)).cast("double")
     stop_list = sorted(STOPWORDS)
@@ -816,9 +812,7 @@ def q_dedup_exact(spark, sf_dir):
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
-    return D.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", rebalance=False
-    )
+    return D.minhash_lsh_pairs(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def q_dedup_ngram_jaccard(spark, sf_dir):
@@ -826,9 +820,7 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
 
 
 def q_simhash(spark, sf_dir):
-    return D.simhash(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", rebalance=False
-    ).select(
+    return D.simhash(_t(spark, sf_dir, "documents"), "doc_id", "text").select(
         F.col("doc_id").alias("doc"), "simhash"
     )
 
@@ -1071,9 +1063,7 @@ def q_ann_ivf_topk(spark, sf_dir):
 def q_simhash_near_pairs(spark, sf_dir):
     """Banded Hamming join over SimHash signatures: candidates share a
     15-bit chunk (equi-join), exact distance via bit_count(xor)."""
-    return D.simhash_near_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", rebalance=False
-    )
+    return D.simhash_near_pairs(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -1081,9 +1071,7 @@ def q_dedup_clusters(spark, sf_dir):
     duplicates): connected components over the MinHash-LSH pair graph
     via iterative min-label propagation; oracle is a recursive-CTE
     transitive closure — an independent derivation."""
-    return D.dedup_clusters(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", rebalance=False
-    )
+    return D.dedup_clusters(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 _PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
@@ -1121,8 +1109,8 @@ def q_dedup_apply(spark, sf_dir):
     representative member set — the keep-one contract a training-data
     pipeline actually executes."""
     d = _t(spark, sf_dir, "documents")
-    cc = D.dedup_resolution(d, "doc_id", "text", rebalance=False)
-    drop = cc.filter(F.col("node") != F.col("cluster")).select(
+    labels, _ = D.dedup_resolution(d, "doc_id", "text")
+    drop = labels.filter(F.col("node") != F.col("cluster")).select(
         F.col("node").alias("doc_id")
     )
     kept = d.join(drop, "doc_id", "left_anti")
@@ -1415,7 +1403,7 @@ def q_strip_boilerplate(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     n = C.BOILERPLATE_CHUNK_WORDS
-    ws = C._words(F.col("text"))  # the shared tokenization the oracle mirrors
+    ws = X.words_arr(F.col("text"))  # the shared tokenization the oracle mirrors
     chunked = F.when(
         F.size(ws) > 0,
         F.array_join(

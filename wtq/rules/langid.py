@@ -197,10 +197,6 @@ def predict_lang(text: str, _lwords: "list[str] | None" = None) -> tuple[str, fl
     return ranked[0][1], margin
 
 
-def predict_lang_batch(texts) -> list[tuple[str, float]]:
-    return [predict_lang(t if t is not None else "") for t in texts]
-
-
 # Confidence gate for the L-1 rule: below this margin the prediction is
 # treated as unreliable and the rule does not fire.
 MARGIN_MIN = 0.05

@@ -91,7 +91,3 @@ def char_perplexity(
     if n == 0:
         return 0.0
     return math.exp(-sum(lls) / n)
-
-
-def char_perplexity_batch(texts) -> list[float]:
-    return [char_perplexity(t if t is not None else "") for t in texts]

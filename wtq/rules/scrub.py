@@ -85,7 +85,3 @@ def scrub_text(text: str) -> ScrubResult:
         if any(w in lower for w in _PROFANITY_LOWER):  # ASCII: presence ⊇ (?i)\b match
             out, n_prof = PROFANITY_RE.subn(PROFANITY_TOKEN, out)
     return ScrubResult(out, n_email, n_phone, n_ip, n_prof)
-
-
-def scrub_batch(texts) -> list[ScrubResult]:
-    return [scrub_text(t) for t in texts]

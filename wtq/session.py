@@ -40,10 +40,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("WTQ_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # let the planner choose shuffled-hash over sort-merge when its
-        # size conditions hold (guide §3.1/§9, round-6) — strategy
-        # choice only, never results
-        .config("spark.sql.join.preferSortMergeJoin", "false")
+        # join strategy is chosen per join with hints (SHUFFLE_HASH in
+        # q_region_revenue / q_cust_supp_nation_matrix); unhinted joins
+        # keep the spill-safe sort-merge default
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
