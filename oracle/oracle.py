@@ -1,10 +1,12 @@
 """Pure-pandas/Python reference implementation (golden-label oracle).
 
-Independent of Spark: re-crawl dedup + heuristics are re-derived here
-with plain Python/pandas (a different code path from the pipeline's
-DataFrame expressions), while the scrub/langid/perplexity cores are
-the SAME pure functions the pipeline's pandas UDF wraps — required for
-byte-identical scrubbed text (SURVEY.md §5.2, §7 hard-part 1).
+Independent of Spark: re-crawl dedup + the rule thresholds are
+re-derived here with plain Python/pandas (a different code path from
+the pipeline's DataFrame expressions), while the scrub/langid/
+perplexity/stats values come from the SAME batch kernel the pipeline's
+pandas UDF runs (wtq.rules.kernel.score_batch), called once over the
+deduplicated frame — required for byte-identical scrubbed text
+(SURVEY.md §5.2, §7 hard-part 1).
 """
 
 from __future__ import annotations
@@ -14,9 +16,8 @@ import hashlib
 import pandas as pd
 
 from wtq.rules import heuristics as H
-from wtq.rules.langid import MARGIN_MIN, predict_lang
-from wtq.rules.perplexity import char_perplexity
-from wtq.rules.scrub import scrub_text
+from wtq.rules.kernel import STAT_FIELDS, score_batch
+from wtq.rules.langid import MARGIN_MIN
 
 
 def oracle_decide(pages: pd.DataFrame) -> pd.DataFrame:
@@ -29,24 +30,30 @@ def oracle_decide(pages: pd.DataFrame) -> pd.DataFrame:
     dedup = pages.sort_values(
         ["url", "warc_ts", "text"], ascending=[True, False, True]
     ).drop_duplicates("url", keep="first")
+    cols = score_batch(dedup["text"].tolist())
     rows = []
-    for r in dedup.itertuples(index=False):
-        sr = scrub_text(r.text)
-        lang_pred, margin = predict_lang(sr.text)
-        ppl = char_perplexity(sr.text)
-        stats = H.py_stats(sr.text)
+    for i, r in enumerate(dedup.itertuples(index=False)):
+        # NULL scrubbed = scrubbing changed nothing (the pipeline's
+        # coalesce with the input column)
+        text = cols["scrubbed"][i]
+        text = r.text if text is None else text
+        stats = {f: cols[f][i] for f in STAT_FIELDS}
+        lang_pred, margin = cols["pred_lang"][i], cols["lang_margin"][i]
+        n_prof = int(cols["n_profanity"][i])
         mismatch = (lang_pred != r.lang) and (margin >= MARGIN_MIN)
-        fired = H.py_fired_rules(stats, mismatch, ppl, sr.n_profanity)
+        fired = H.py_fired_rules(stats, mismatch, cols["ppl"][i], n_prof)
         rows.append(
             {
                 "url": r.url,
                 "keep": len(fired) == 0,
                 "fired_rules": fired,
-                "text": sr.text,
-                "text_sha256": hashlib.sha256(sr.text.encode("utf-8")).hexdigest(),
-                "n_scrub_edits": sr.n_edits,
+                "text": text,
+                "text_sha256": hashlib.sha256(text.encode("utf-8")).hexdigest(),
+                "n_scrub_edits": int(
+                    cols["n_email"][i] + cols["n_phone"][i] + cols["n_ip"][i] + n_prof
+                ),
                 "pred_lang": lang_pred,
-                "n_words": stats["n_words"],
+                "n_words": int(stats["n_words"]),
             }
         )
     return pd.DataFrame(rows)

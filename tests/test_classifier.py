@@ -112,13 +112,19 @@ def test_scoring_plan_zero_exchange_zero_python(spark):
 
 def test_single_class_seed_rejected(spark):
     """A one-class seed has no log-odds (ln of a ratio with an empty
-    class).  Under ANSI mode (Spark 4 default) the zero-division
-    surfaces as a hard arithmetic error at fit time — pinned here so a
-    bad seed fails loudly instead of silently scoring garbage."""
-    labeled = _labeled(spark).filter("y")
-    w, c = train_nb_weights(labeled)
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        c.collect()
+    class).  Fitting raises ValueError under either ANSI setting —
+    without ANSI the zero ratio would otherwise be a silent NULL prior
+    that drops every document — so a bad seed fails loudly instead of
+    silently scoring garbage."""
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            for cls in ("y", "NOT y"):
+                with pytest.raises(ValueError, match="one-class seed"):
+                    train_nb_weights(_labeled(spark).filter(cls))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
 
 
 def test_end_to_end_wrapper_matches_manual_composition(spark):

@@ -31,6 +31,20 @@ from wtq.operators.jpeg import (
     quant_table,
 )
 
+# T.81 Figure A.6: the natural (row-major) index of each zigzag position,
+# transcribed from the spec — the hand-built bitstreams below use it, not
+# the codec's ZIGZAG, so a transposed codec table fails them
+T81_ZIGZAG = [
+    0, 1, 8, 16, 9, 2, 3, 10,
+    17, 24, 32, 25, 18, 11, 4, 5,
+    12, 19, 26, 33, 40, 48, 41, 34,
+    27, 20, 13, 6, 7, 14, 21, 28,
+    35, 42, 49, 56, 57, 50, 43, 36,
+    29, 22, 15, 23, 30, 37, 44, 51,
+    58, 59, 52, 45, 38, 31, 39, 46,
+    53, 60, 61, 54, 47, 55, 62, 63,
+]
+
 
 def _idct_spec(coef: np.ndarray) -> np.ndarray:
     """T.81 A.3.3 IDCT, transcribed literally (double sum) —
@@ -67,7 +81,7 @@ def _handmade_gray_jpeg(zz_coeffs: list, q00_table: np.ndarray) -> bytes:
     ac_codes, ac_bits, ac_vals = _flat_huff_table([s for s, _, _ in acs])
 
     out = bytearray(b"\xff\xd8")
-    zzr = [q00_table[r, c] for r, c in ZIGZAG]
+    zzr = [q00_table.flat[i] for i in T81_ZIGZAG]
     dqt = bytes([0]) + bytes(int(v) for v in zzr)
     out += b"\xff\xdb" + struct.pack(">H", 2 + len(dqt)) + dqt
     sof = struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0])
@@ -87,6 +101,11 @@ def _handmade_gray_jpeg(zz_coeffs: list, q00_table: np.ndarray) -> bytes:
     bw.flush()
     out += bytes(bw.out) + b"\xff\xd9"
     return bytes(out)
+
+
+def test_zigzag_is_the_t81_table():
+    assert [r * 8 + c for r, c in ZIGZAG] == T81_ZIGZAG
+    assert ZIGZAG[1] == (0, 1)
 
 
 def test_dc_only_block_is_flat_at_the_closed_form_value():
@@ -114,7 +133,7 @@ def test_single_ac_coefficient_matches_spec_idct():
         blob = _handmade_gray_jpeg(zz, q)
         img = decode_jpeg(blob).astype(np.float64)
         coef = np.zeros((8, 8))
-        r, c = ZIGZAG[zz_idx]
+        r, c = divmod(T81_ZIGZAG[zz_idx], 8)
         coef[r, c] = 3 * int(q[r, c])
         expected = np.clip(np.round(_idct_spec(coef) + 128), 0, 255)
         assert np.abs(img - expected).max() <= 1, (zz_idx, img[0], expected[0])
@@ -184,7 +203,8 @@ def test_byte_stuffing_appears_and_decodes():
     """The entropy stream must byte-stuff 0xFF (T.81 F.1.2.3) and the
     decoder must strip the stuffed 0x00.  Two layers: the bit writer/
     reader mechanism directly, and an end-to-end image (seed probed to
-    produce a stuffed byte; deterministic given the fixed generator)."""
+    produce a stuffed byte under the T.81 zigzag order; deterministic
+    given the fixed generator)."""
     from wtq.operators.jpeg import _BitReader, _BitWriter
 
     bw = _BitWriter()
@@ -195,7 +215,7 @@ def test_byte_stuffing_appears_and_decodes():
     br = _BitReader(bytes(bw.out), 0)
     assert br.bits(8) == 0xFF and br.bits(8) == 0xA5
 
-    img = _synth_rgb(5, 32, 32)
+    img = _synth_rgb(6, 32, 32)
     blob = encode_jpeg(img, quality=95)
     body = blob[blob.find(b"\xff\xda") + 2 :]
     assert b"\xff\x00" in body, "probe seed no longer produces stuffing"
@@ -215,6 +235,17 @@ def test_error_contract_for_unsupported_and_malformed():
         decode_jpeg(bytes(blob[: len(blob) // 2]))  # truncated entropy
     with pytest.raises(ValueError):
         decode_jpeg(b"not a jpeg at all")
+
+
+def test_non_interleaved_scan_is_rejected():
+    """A scan over fewer components than the frame declares (the first
+    scan of a non-interleaved file) raises instead of decoding a raster
+    with empty planes."""
+    blob = bytearray(encode_jpeg(_synth_rgb(2, 16, 16), quality=90))
+    sos = blob.find(b"\xff\xda")
+    blob[sos + 4] = 1  # Ns: 3 → 1 (marker 2 bytes, Ls 2 bytes)
+    with pytest.raises(ValueError, match="non-interleaved scan: 1 of 3"):
+        decode_jpeg(bytes(blob))
 
 
 def test_decode_image_dispatches_jpeg():

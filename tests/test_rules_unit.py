@@ -83,8 +83,17 @@ def test_repetition_rules_fire():
     assert not set(fired) & {c for c, _, _ in R.REPETITION_RULES}
 
 
+def _kernel_repetition_stats(texts):
+    """The batch kernel's n-gram stats for `texts`, scored as ONE batch
+    (so a gram leaking across documents would show), one dict per text."""
+    from wtq.rules import kernel as K
+
+    cols = K.stat_columns(texts, [t.lower() for t in texts], K.flatten([t.split() for t in texts]))
+    return [{f: cols[f][i] for f in K.STAT_FIELDS} for i in range(len(texts))]
+
+
 def test_cascaded_repetition_stats_equal_reference_forms():
-    """The interned/cascaded fast path in py_stats must be value-equal
+    """The kernel's interned/cascaded n-gram stats must be value-equal
     to the simple per-n definitions, including on tie-heavy and
     degenerate inputs."""
     import random
@@ -102,9 +111,8 @@ def test_cascaded_repetition_stats_equal_reference_forms():
         " ".join(rng.choice(vocab) for _ in range(rng.randint(2, 60)))
         for _ in range(200)
     ]
-    for text in cases:
+    for text, got in zip(cases, _kernel_repetition_stats(cases)):
         words = H.py_words(text)
-        got = H._py_repetition_stats(words)
         for n in (2, 3, 4):
             assert got[f"top_{n}gram_frac"] == H.py_top_ngram_frac(words, n), (text, n)
         for n in range(5, 11):
@@ -114,21 +122,25 @@ def test_cascaded_repetition_stats_equal_reference_forms():
 def test_cascaded_repetition_stats_equal_reference_forms_hypothesis():
     """Property form of the equivalence: arbitrary word sequences from
     a small alphabet (maximizing collisions/ties) over varied word
-    lengths."""
+    lengths, several documents per kernel batch."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
+    tokens = st.lists(st.sampled_from(["a", "bb", "ccc", "d", "ee", "a b"]), max_size=40)
+
     @settings(max_examples=300, deadline=None)
-    @given(st.lists(st.sampled_from(["a", "bb", "ccc", "d", "ee", "a b"]), max_size=40))
-    def check(tokens):
+    @given(st.lists(tokens, min_size=1, max_size=4))
+    def check(docs):
         # "a b" injects a token that SPLITS into two words, covering
-        # multi-word interactions of the text round-trip too
-        words = H.py_words(" ".join(tokens))
-        got = H._py_repetition_stats(words)
-        for n in (2, 3, 4):
-            assert got[f"top_{n}gram_frac"] == H.py_top_ngram_frac(words, n)
-        for n in range(5, 11):
-            assert got[f"dup_{n}gram_frac"] == H.py_dup_ngram_frac(words, n)
+        # multi-word interactions of the text round-trip too; several
+        # documents share one batch
+        texts = [" ".join(t) for t in docs]
+        for text, got in zip(texts, _kernel_repetition_stats(texts)):
+            words = H.py_words(text)
+            for n in (2, 3, 4):
+                assert got[f"top_{n}gram_frac"] == H.py_top_ngram_frac(words, n)
+            for n in range(5, 11):
+                assert got[f"dup_{n}gram_frac"] == H.py_dup_ngram_frac(words, n)
 
     check()
 

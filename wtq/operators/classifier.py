@@ -59,7 +59,10 @@ def train_nb_weights(
       round(1e6 · ln(N_pos/N_neg)).
 
     Both classes must be non-empty (ln of a zero ratio is undefined —
-    a seed with one class is not a training set).
+    a seed with one class is not a training set): the class counts are
+    read at fit time and a one-class or empty seed raises ``ValueError``
+    whatever ``spark.sql.ansi.enabled`` says (without ANSI the log of a
+    zero ratio would be a silent NULL prior that drops every document).
     """
     y = F.col("y")
     tok = labeled.select(
@@ -75,10 +78,15 @@ def train_nb_weights(
         F.count(F.when(~y, True)).alias("t_neg"),
         F.countDistinct("t").alias("v"),
     )
-    doc_totals = labeled.agg(
-        F.count(F.when(F.col(label_col).cast("boolean"), True)).alias("n_pos"),
-        F.count(F.when(~F.col(label_col).cast("boolean"), True)).alias("n_neg"),
-    )
+    n_pos, n_neg = labeled.agg(
+        F.count(F.when(F.col(label_col).cast("boolean"), True)),
+        F.count(F.when(~F.col(label_col).cast("boolean"), True)),
+    ).first()
+    if not (n_pos and n_neg):
+        raise ValueError(
+            f"one-class seed: {n_pos} positive and {n_neg} negative documents; "
+            "train_nb_weights needs both classes"
+        )
 
     def _w(c_pos, c_neg):
         # each ln argument is an exact-integer ratio → bit-identical
@@ -94,14 +102,9 @@ def train_nb_weights(
     weights = counts.crossJoin(F.broadcast(totals)).select(
         "t", _w(F.col("c_pos"), F.col("c_neg")).alias("w_micro")
     )
-    consts = (
-        totals.crossJoin(doc_totals)
-        .select(
-            _w(F.lit(0), F.lit(0)).alias("w0_micro"),
-            F.round(F.log(F.col("n_pos") / F.col("n_neg")) * MICRO)
-            .cast("long")
-            .alias("prior_micro"),
-        )
+    consts = totals.select(
+        _w(F.lit(0), F.lit(0)).alias("w0_micro"),
+        F.round(F.log(F.lit(n_pos) / F.lit(n_neg)) * MICRO).cast("long").alias("prior_micro"),
     )
     return weights, consts
 

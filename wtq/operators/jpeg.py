@@ -47,11 +47,13 @@ import numpy as np
 # Shared constants
 # ---------------------------------------------------------------------------
 
-# zigzag scan order: ZIGZAG[i] = (row, col) of the i-th coefficient
+# zigzag scan order (T.81 Figure A.6): ZIGZAG[i] = (row, col) of the
+# i-th coefficient.  Anti-diagonals in turn; odd ones run down-left (by
+# row), even ones up-right (by column), so ZIGZAG[1] == (0, 1).
 def _zigzag_order() -> list:
     order = sorted(
         ((r, c) for r in range(8) for c in range(8)),
-        key=lambda rc: (rc[0] + rc[1], rc[1] if (rc[0] + rc[1]) % 2 else rc[0]),
+        key=lambda rc: (rc[0] + rc[1], rc[0] if (rc[0] + rc[1]) % 2 else rc[1]),
     )
     return order
 
@@ -512,10 +514,18 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
             if frame is None:
                 raise ValueError("SOS before SOF")
             ns = seg[0]
+            if ns != len(frame["comps"]):
+                # only one interleaved scan over every component is
+                # decoded; a per-component scan would leave planes empty
+                raise ValueError(
+                    f"non-interleaved scan: {ns} of {len(frame['comps'])} components"
+                )
             scan = []
             for si in range(ns):
                 cs, tt = seg[1 + 2 * si : 3 + 2 * si]
-                comp = next(c for c in frame["comps"] if c["id"] == cs)
+                comp = next((c for c in frame["comps"] if c["id"] == cs), None)
+                if comp is None:
+                    raise ValueError(f"scan names unknown component {cs}")
                 scan.append({**comp, "td": tt >> 4, "ta": tt & 0xF})
             pos += seglen
             return _decode_scan(blob, pos, frame, scan, qt, huff, restart_interval)

@@ -7,14 +7,18 @@ CASE-ladder tagging (SURVEY.md §2.7 U3 note: evaluate every rule per
 record in one scan instead of 13 unioned scans, semantically equal to
 proccess_data.sql:505-737 + the :734-736 rollup).  The stat INPUTS to
 the thresholds come from the pipeline's single Arrow score pass
-(wtq/pipeline.py), which calls ``py_stats`` below — the text is
-already in Python for the regex scrub, so the O(words) dict pass is
-far cheaper than re-evaluating interpreted higher-order expressions
-per output column (measured in round 1: 176 → >10k docs/sec).
+(wtq/pipeline.py), which runs the batch kernel (wtq/rules/kernel.py)
+— the text is already in Python for the regex scrub, so per-batch word
+arrays are far cheaper than re-evaluating interpreted higher-order
+expressions per output column (measured in round 1: 176 → >10k
+docs/sec).
 
-Oracle side: the differential oracle (oracle/oracle.py) calls the SAME
-``py_stats`` while re-deriving keep/drop decisions independently of
-the Spark plan.  The contract for every stat is documented once here.
+Oracle side: the differential oracle (oracle/oracle.py) runs the SAME
+kernel while re-deriving keep/drop decisions independently of the
+Spark plan.  ``py_stats`` is the kernel on a batch of one; the simple
+per-n forms ``py_top_ngram_frac`` / ``py_dup_ngram_frac`` below are the
+test reference for its n-gram cascade.  The contract for every stat is
+documented once here.
 
 Definitions (on the SCRUBBED text):
   words      = non-empty substrings after splitting on whitespace
@@ -49,7 +53,6 @@ from __future__ import annotations
 
 from collections import Counter
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -108,7 +111,7 @@ def py_rep_line_frac(text: str, _lines: "list[str] | None" = None) -> float:
     lines = _lines if _lines is not None else py_lines(text)
     if not lines:
         return 0.0
-    total = sum(len(l) for l in lines)
+    total = sum(map(len, lines))
     if total == 0:
         return 0.0
     c = Counter(lines)
@@ -128,7 +131,7 @@ def py_dup_para_frac(text: str) -> float:
     paras = [p for p in (text or "").split("\n\n") if p != ""]
     if not paras:
         return 0.0
-    total = sum(len(p) for p in paras)
+    total = sum(map(len, paras))
     if total == 0:
         return 0.0
     c = Counter(paras)
@@ -148,8 +151,8 @@ def py_top_ngram_frac(words: list[str], n: int) -> float:
         return 0.0
     c = Counter(tuple(words[i : i + n]) for i in range(len(words) - n + 1))
     # tie-break on gram char length — the value-determining quantity —
-    # so the answer is independent of gram representation (the
-    # cascaded fast path in _py_repetition_stats counts interned ids)
+    # so the answer is independent of gram representation (the kernel's
+    # cascade counts interned ids)
     cnt, chars = max((k, sum(len(w) for w in g)) for g, k in c.items())
     if cnt < 2:
         return 0.0
@@ -168,149 +171,17 @@ def py_dup_ngram_frac(words: list[str], n: int) -> float:
     return dup / total
 
 
-def _rep_stats_core(
-    L: int, ids64: "np.ndarray", wchars: "np.ndarray", total: int
-) -> dict[str, float]:
-    """All nine Gopher n-gram stats in one cascaded pass over
-    pre-interned word ids — value-equal to calling py_top_ngram_frac /
-    py_dup_ngram_frac per n (property-tested), but hot-path-shaped
-    (this is the pipeline's Arrow-pass inner loop):
-
-      * each level's grams are built INCREMENTALLY: an n-gram key is
-        (intern id of its (n−1)-gram prefix) · W + (last word id) —
-        one vectorized multiply-add + np.unique per level (round-6:
-        the per-level Python listcomp + Counter became numpy int64
-        arrays; keys stay < L·W ≤ L², machine ints, and np.unique's
-        inverse indices ARE the next level's interning — relabeling
-        preserves the gram equivalence classes and char data, which is
-        all the counts depend on);
-      * gram char lengths accumulate along the same chain (kch indexed
-        by the unique-key array);
-      * the subgram implication (a repeated n-gram contains a repeated
-        (n−1)-gram) exits the cascade at the first repetition-free
-        order, so clean documents cost ONE level.
-
-    All arithmetic is integer until the final division, so the emitted
-    doubles are bit-identical to the dict/Counter form this replaces.
-    """
-    out = {f"top_{n}gram_frac": 0.0 for n in (2, 3, 4)}
-    out.update({f"dup_{n}gram_frac": 0.0 for n in range(5, 11)})
-    if total == 0 or L < 2:
-        return out
-    W = wchars.shape[0]
-    # level state: cur[p] = intern id of the (n-1)-gram at position p;
-    # pch[gid] = its char length.  Level 1 = the words themselves.
-    cur, pch = ids64, wchars
-    for n in range(2, 11):
-        if L < n:
-            break
-        # key of the n-gram at p: prefix gram id · W + last word id
-        keys = cur[: L - n + 1] * W + ids64[n - 1 :]
-        uniq, inv, cnt = np.unique(keys, return_inverse=True, return_counts=True)
-        kch = pch[uniq // W] + wchars[uniq % W]
-        if n <= 4:
-            mx = int(cnt.max())
-            if mx < 2:
-                break  # no repeated n-gram ⇒ none at any higher order
-            # tie-break on chars (value-determining, representation-
-            # independent — matches py_top_ngram_frac)
-            chars = int(kch[cnt == mx].max())
-            out[f"top_{n}gram_frac"] = mx * chars / total
-        else:
-            m = cnt > 1
-            dup = int(((cnt[m] - 1) * kch[m]).sum())
-            if dup == 0:
-                break
-            out[f"dup_{n}gram_frac"] = dup / total
-        if n < 10 and L >= n + 1:
-            # the inverse indices intern this level's grams for the next
-            cur, pch = inv.astype(np.int64, copy=False), kch
-    return out
-
-
-def _intern_words(words: list[str]):
-    """One interning pass shared by the mean/top-word/stopword stats
-    and the repetition cascade: (ids64, wchars, counts) — word ids in
-    document order, per-unique-word char lengths, per-unique-word
-    occurrence counts."""
-    idx: dict[str, int] = {}
-    setd = idx.setdefault
-    ids = [setd(w, len(idx)) for w in words]
-    U = len(idx)
-    ids64 = np.asarray(ids, dtype=np.int64)
-    wchars = np.empty(U, dtype=np.int64)
-    for w, i in idx.items():
-        wchars[i] = len(w)
-    counts = np.bincount(ids64, minlength=U)
-    return idx, ids64, wchars, counts
-
-
-def _py_repetition_stats(words: list[str]) -> dict[str, float]:
-    """Public/test entry: intern then run the shared cascade core."""
-    total = sum(len(w) for w in words)
-    if total == 0 or len(words) < 2:
-        out = {f"top_{n}gram_frac": 0.0 for n in (2, 3, 4)}
-        out.update({f"dup_{n}gram_frac": 0.0 for n in range(5, 11)})
-        return out
-    _, ids64, wchars, _ = _intern_words(words)
-    return _rep_stats_core(len(words), ids64, wchars, total)
-
-
 def py_stats(text: str, _ltext: "str | None" = None) -> dict[str, float]:
-    """`_ltext` optionally supplies text.lower() (the pipeline's Arrow
-    pass computes it once for langid/perplexity/has_lorem — round-6);
+    """Every stat for one document: the batch kernel
+    (wtq.rules.kernel.stat_columns) on a batch of one.  `_ltext`
+    optionally supplies text.lower() when the caller already has it;
     value-identical to the single-argument call."""
+    from wtq.rules.kernel import STAT_FIELDS, flatten, stat_columns
+
     text = text or ""
-    words = py_words(text)
-    lines = py_lines(text)
-    n_words = len(words)
-    n_lines = len(lines)
-    nw = max(n_words, 1)
-    nl = max(n_lines, 1)
-    if n_words:
-        # shared interning (round-6): mean/top-word/stopword and the
-        # repetition cascade all read one pass.  Integer sums → the
-        # same divisions → bit-identical to the per-stat loops.
-        idx, ids64, wchars, counts = _intern_words(words)
-        total_chars = int(counts @ wchars)
-        n_stop = 0
-        for w, i in idx.items():
-            if w.lower() in STOPWORDS:
-                n_stop += int(counts[i])
-        top_word = int(counts.max())
-        rep = _rep_stats_core(n_words, ids64, wchars, total_chars)
-    else:
-        total_chars = n_stop = top_word = 0
-        rep = _py_repetition_stats(words)
-    # one fused pass over the (short) line list for the three per-line
-    # counters (round-6; counts identical to the three genexprs)
-    n_bullet = n_ellipsis = n_brace = 0
-    for l in lines:
-        if l.startswith(("- ", "* ", "•")):
-            n_bullet += 1
-        if l.endswith("..."):
-            n_ellipsis += 1
-        if "{" in l or "}" in l:
-            n_brace += 1
-    return {
-        "n_words": n_words,
-        "n_lines": n_lines,
-        "mean_word_len": (total_chars / n_words) if n_words else 0.0,
-        # str.count per symbol char (C speed) == the per-char scan for
-        # single-char needles
-        "symbol_ratio": sum(text.count(c) for c in R.SYMBOLS) / nw,
-        "stopword_frac": n_stop / nw,
-        "bullet_frac": n_bullet / nl,
-        "ellipsis_frac": n_ellipsis / nl,
-        "rep_line_frac": py_rep_line_frac(text, _lines=lines),
-        "top_word_frac": (top_word / n_words) if words else 0.0,
-        "brace_line_frac": n_brace / nl,
-        "has_lorem": 1.0
-        if "lorem ipsum" in (_ltext if _ltext is not None else text.lower())
-        else 0.0,
-        "dup_para_frac": py_dup_para_frac(text),
-        **rep,
-    }
+    ltext = _ltext if _ltext is not None else text.lower()
+    cols = stat_columns([text], [ltext], flatten([text.split()]))
+    return {f: cols[f][0].item() for f in STAT_FIELDS}
 
 
 def py_fired_rules(

@@ -8,8 +8,9 @@ whose profiles are derived at import time from the embedded wordlists
 (wtq.rules.lexicon.LANG_WORDS) — deterministic, no downloads
 (SURVEY.md §7 hard-part 5).
 
-Pure-Python scoring core shared by the Spark pandas UDF and the
-oracle, so predictions agree exactly.
+The model and the per-word scorer live here; the batch kernel
+(wtq/rules/kernel.py) that the Spark pandas UDF and the oracle both run
+applies them, so predictions agree exactly.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ from functools import lru_cache
 
 from wtq.rules.lexicon import LANG_WORDS
 
-_CJK_RE = re.compile(r"[一-鿿]")
+_NON_CJK_RE = re.compile(r"[^一-鿿]+")
 
 _LANGS = sorted(LANG_WORDS)  # deterministic order: de, en, es, fr, zh
 
@@ -49,6 +50,10 @@ _LATIN_LEXICON: frozenset = frozenset(
 # (40-200 words): unseen it/pt/nl false-fire ≤ 0.7%, trained-language
 # abstention 0.0% (doc scale) / ≤ 1% (15-35-word snippets).
 LEX_HIT_MIN = 0.25
+
+# Per-doc cost cap (cf. st_subdivide, SURVEY.md §4): a document is scored
+# on its first SAMPLE_WORDS alphabetic lower-cased words.
+SAMPLE_WORDS = 200
 
 
 def _bigrams(s: str):
@@ -84,9 +89,10 @@ def _profiles() -> dict[str, dict[str, float]]:
 def _cjk_fraction(s: str) -> float:
     if not s:
         return 0.0
-    # compiled char-class scan (C speed) == the per-char range test;
-    # on the non-CJK common case this is one pass with zero matches
-    n = len(_CJK_RE.findall(s))
+    # what is left after deleting every non-CJK run is the CJK chars:
+    # one C scan, without the per-match string objects findall builds;
+    # ASCII text has none
+    n = 0 if s.isascii() else len(_NON_CJK_RE.sub("", s))
     return n / len(s)
 
 
@@ -125,26 +131,14 @@ def _word_scores(w: str) -> tuple[tuple[float, ...], int]:
 
 
 # any char outside the Latin blocks (>= U+0250) — one compiled-regex
-# scan replaces the per-char ord() loop (round-6: the Python loop was
-# ~10× the cost of the C scan on the same sample)
+# scan per distinct sample word.  The script gate is the fraction of
+# LETTERS in the Latin blocks (Basic..Extended-B, < U+0250 — covers every
+# accented char the supported languages use) across the SAME capped
+# alpha-word sample the scorer consumes: a fixed raw-char window was
+# bypassable by a long digit/punctuation/markup preamble before non-Latin
+# prose (found in round-4 self-review, regression-pinned), while the
+# alpha-word sample cannot contain a letterless prefix by construction.
 _NON_LATIN_RE = re.compile("[\u0250-\U0010ffff]")
-
-
-def _latin_fraction(words) -> float:
-    """Fraction of LETTERS in the Latin blocks (Basic..Extended-B,
-    < U+0250 — covers every accented char the supported languages
-    use) across the given alpha-only words.  Computed over the SAME
-    capped word sample the scorer consumes — a fixed raw-char window
-    was bypassable by a long digit/punctuation/markup preamble before
-    non-Latin prose (found in round-4 self-review, regression-pinned),
-    while the alpha-word sample cannot contain a letterless prefix by
-    construction."""
-    joined = "".join(words)
-    letters = len(joined)
-    if not letters:
-        return 1.0
-    latin = letters - len(_NON_LATIN_RE.findall(joined))
-    return latin / letters
 
 
 def predict_lang(text: str, _lwords: "list[str] | None" = None) -> tuple[str, float]:
@@ -159,42 +153,19 @@ def predict_lang(text: str, _lwords: "list[str] | None" = None) -> tuple[str, fl
     fully-unseen script degenerates to the per-language smoothing
     baselines, which differ by a CONSTANT — measured: Russian, Greek,
     Arabic, and Korean all predicted 'zh' at margin 0.118 > MARGIN_MIN
-    (round-4 fix; pinned in test_heldout_eval.py)."""
-    if not text:
-        return "und", 0.0
-    if _cjk_fraction(text) > 0.30:
-        return "zh", 10.0
-    # Score lowercase words only (strip digits/symbols deterministically).
-    # `_lwords` lets the pipeline's Arrow pass share ONE
-    # text.lower().split() with char_perplexity (round-6; identical
-    # value by construction).
-    # cap per-doc work at 200 scored words (cf. st_subdivide cost
-    # bound, SURVEY.md §4); islice stops the filter at the cap instead
-    # of filtering the whole document first (round-6, value-identical)
-    from itertools import islice
+    (round-4 fix; pinned in test_heldout_eval.py).
 
-    lwords = _lwords if _lwords is not None else text.lower().split()
-    sample = list(islice((w for w in lwords if w.isalpha()), 200))
-    if not sample:
-        return "und", 0.0
-    if _latin_fraction(sample) < 0.5:
-        return "und", 0.0
-    # Unseen-LANGUAGE abstention (Latin scripts): see LEX_HIT_MIN.
-    # Computed over the same capped sample the scorer consumes, like
-    # the script gate (round-4 preamble-bypass lesson).
-    if sum(1 for w in sample if w in _LATIN_LEXICON) < LEX_HIT_MIN * len(sample):
-        return "und", 0.0
-    # column-wise sequential sums: sum() adds left-to-right, so each
-    # language's total is the identical float chain the per-word
-    # accumulation loop produced (round-6 hot-path shape)
-    scored = [_word_scores(w) for w in sample]
-    totals = [sum(col) for col in zip(*(ws for ws, _ in scored))]
-    nbg = sum(n for _, n in scored)
-    if nbg == 0:
-        return "und", 0.0
-    ranked = sorted(zip(totals, _LANGS), key=lambda kv: (-kv[0], kv[1]))
-    margin = (ranked[0][0] - ranked[1][0]) / nbg
-    return ranked[0][1], margin
+    Computed by the batch kernel (wtq.rules.kernel.lang_columns) on a
+    batch of one.  Gates, in order: empty text → 'und'; CJK share > 0.30
+    → ('zh', 10.0); then over the sample (SAMPLE_WORDS): no
+    sample, Latin-letter share < 0.5 (see _NON_LATIN_RE) or lexicon hits
+    < LEX_HIT_MIN of the sample → 'und'.  `_lwords` optionally supplies
+    text.lower().split() when the caller already has it."""
+    from wtq.rules.kernel import flatten, lang_columns
+
+    lwords = _lwords if _lwords is not None else (text or "").lower().split()
+    lang, margin = lang_columns([text], flatten([lwords]))
+    return lang[0], margin[0].item()
 
 
 # Confidence gate for the L-1 rule: below this margin the prediction is

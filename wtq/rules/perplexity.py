@@ -6,7 +6,9 @@ corpus synthesized from the embedded wordlists — self-contained, no
 network (SURVEY.md §7 hard-part 5).  High perplexity ⇒ gibberish ⇒
 rule P-1.
 
-Pure-Python core shared by the Spark pandas UDF and the oracle.
+The model and the per-word scorer live here; the batch kernel
+(wtq/rules/kernel.py) shared by the Spark pandas UDF and the oracle
+applies them.
 """
 
 from __future__ import annotations
@@ -17,6 +19,10 @@ from functools import lru_cache
 from wtq.rules.lexicon import CONTENT_WORDS, LANG_WORDS
 
 _ORDER = 3
+
+# Per-doc cost cap: perplexity is taken over the first MAX_WORDS words,
+# which keeps Arrow batches balanced (cf. st_subdivide, SURVEY.md §4).
+MAX_WORDS = 400
 
 
 @lru_cache(maxsize=1)
@@ -70,24 +76,15 @@ def _word_ll(w: str) -> tuple[float, int]:
 
 
 def char_perplexity(
-    text: str, max_words: int = 400, _lwords: "list[str] | None" = None
+    text: str, max_words: int = MAX_WORDS, _lwords: "list[str] | None" = None
 ) -> float:
     """Per-char perplexity under the trigram LM, computed word-by-word
     (each word scored in a space-padded context, totals pooled); 0.0
-    for empty text.  Work is capped at max_words per document to keep
-    Arrow batches balanced (cost-bounding analog of st_subdivide,
-    SURVEY.md §4).  `_lwords` shares one text.lower().split() with the
-    langid call in the pipeline's Arrow pass (round-6)."""
-    if not text:
-        return 0.0
-    words = _lwords if _lwords is not None else text.lower().split()
-    if not words:
-        return 0.0
-    # column-wise sequential sums over the capped word list — sum()
-    # adds left-to-right, the identical float chain of the per-word
-    # accumulation loop (round-6 hot-path shape)
-    lls, ns = zip(*map(_word_ll, words[:max_words]))
-    n = sum(ns)
-    if n == 0:
-        return 0.0
-    return math.exp(-sum(lls) / n)
+    for empty text, over the first `max_words` words.  The batch kernel
+    (wtq.rules.kernel.ppl_column) on a batch of one; `_lwords`
+    optionally supplies text.lower().split() when the caller already
+    has it."""
+    from wtq.rules.kernel import flatten, ppl_column
+
+    words = _lwords if _lwords is not None else (text or "").lower().split()
+    return ppl_column(flatten([words]), max_words)[0].item()
