@@ -66,8 +66,8 @@ def test_url_default_ports_and_case(spark):
 def test_url_tracking_params_and_sort(spark):
     assert (
         _norm(spark, "https://h.com/p?b=2&utm_source=x&a=1&gclid=g&ref=rss")
-        == "https://h.com/p?a=1&b=2"
-    )
+        == "https://h.com/p?a=1&b=2&ref=rss"
+    )  # ref= can carry content (a referral code, a git ref), so it stays
     # all params tracked → no '?' at all
     assert _norm(spark, "https://h.com/p?utm_campaign=c&fbclid=f") == "https://h.com/p"
 

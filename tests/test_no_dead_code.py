@@ -1,11 +1,12 @@
-"""Dead-code guard: every top-level function and class in `wtq/` must be
-named somewhere other than its own `def`/`class` line.
+"""Dead-code guard: every top-level function, class and module-level
+constant in `wtq/` must be named somewhere other than the line that
+defines it.
 
 The search is a plain word-boundary regex over the source text of the
 package, the tests, the oracle, the benchmarks and the driver entry
 point, so a use inside an f-string, a string-keyed registry or a
 docstring counts as a reference.  Dunder names (module `__getattr__`
-and friends) are called by the interpreter and are exempt."""
+and friends, `__all__`) are read by the interpreter and are exempt."""
 
 from __future__ import annotations
 
@@ -33,8 +34,15 @@ def _top_level_defs() -> list[tuple[str, Path, int]]:
         tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
         for node in tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                if not (node.name.startswith("__") and node.name.endswith("__")):
-                    out.append((node.name, path, node.lineno))
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+            else:
+                continue
+            for name in names:
+                if not (name.startswith("__") and name.endswith("__")):
+                    out.append((name, path, node.lineno))
     return out
 
 

@@ -78,3 +78,38 @@ def test_driver_registry_stays_at_cap():
     # the external driver records at most 50 CORRECTNESS rows; going
     # over silently drops queries from the hard gate (round-2 lesson)
     assert len(QUERIES) == 50
+
+
+@pytest.mark.parametrize("name", ["region_revenue", "cust_supp_nation_matrix"])
+def test_half_cent_revenue_matches_oracle(name, spark, tmp_path):
+    """A revenue sum of exactly 4958901.2250 is stored as the double
+    4958901.22499999963…: DuckDB's round(x, 2) = round(x · 100) / 100
+    gives .22, and the Spark side must too (round(x, 2) on the double's
+    shortest decimal form gave .23)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    i32, i64 = pa.int32(), pa.int64()
+    tables = {
+        "region": pa.table({"r_regionkey": pa.array([0], i32), "r_name": ["EUROPE"]}),
+        "nation": pa.table({
+            "n_nationkey": pa.array([0], i32), "n_name": ["FRANCE"],
+            "n_regionkey": pa.array([0], i32),
+        }),
+        "customer": pa.table({"c_custkey": pa.array([1], i64), "c_nationkey": pa.array([0], i32)}),
+        "supplier": pa.table({"s_suppkey": pa.array([1], i64), "s_nationkey": pa.array([0], i32)}),
+        "orders": pa.table({"o_orderkey": pa.array([1], i64), "o_custkey": pa.array([1], i64)}),
+        "lineitem": pa.table({
+            "l_orderkey": pa.array([1, 1], i64), "l_suppkey": pa.array([1, 1], i64),
+            "l_extendedprice": [4958900.0, 1.225], "l_discount": [0.0, 0.0],
+        }),
+    }
+    con = duckdb.connect()
+    for t, tab in tables.items():
+        pq.write_table(tab, tmp_path / f"{t}.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet'")
+    exp = _normalize(con.execute(ALL_ORACLE_SQL[name]).fetchdf())
+    con.close()
+    got = _normalize(ALL_QUERIES[name](spark, str(tmp_path)).toPandas())
+    assert exp["revenue"].tolist() == [4958901.22]
+    pd.testing.assert_frame_equal(got, exp, check_dtype=False, check_exact=True)

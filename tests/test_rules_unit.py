@@ -9,6 +9,14 @@ from wtq.rules.langid import predict_lang
 from wtq.rules.perplexity import char_perplexity
 from wtq.rules.scrub import scrub_text
 
+# the Gopher repetition family (Rae et al. 2021 Table A1 thresholds)
+REPETITION_THRESHOLDS = {
+    "dup_para_frac": 0.20,
+    "top_2gram_frac": 0.20, "top_3gram_frac": 0.18, "top_4gram_frac": 0.16,
+    "dup_5gram_frac": 0.15, "dup_6gram_frac": 0.14, "dup_7gram_frac": 0.13,
+    "dup_8gram_frac": 0.12, "dup_9gram_frac": 0.11, "dup_10gram_frac": 0.10,
+}
+
 
 def test_registry_codes_unique():
     codes = [r.code for r in R.RULES]
@@ -80,7 +88,7 @@ def test_repetition_rules_fire():
             "walks along the river bank toward a small village market"
     stats = H.py_stats(clean)
     fired = H.py_fired_rules(stats, lang_mismatch=False, ppl=0.0, profanity_hits=0)
-    assert not set(fired) & {c for c, _, _ in R.REPETITION_RULES}
+    assert not set(fired) & {r.code for r in R.RULES if r.stat in REPETITION_THRESHOLDS}
 
 
 def _kernel_repetition_stats(texts):
@@ -146,8 +154,8 @@ def test_cascaded_repetition_stats_equal_reference_forms_hypothesis():
 
 
 def test_repetition_rules_in_registry():
-    codes = {r.code for r in R.RULES}
-    assert {c for c, _, _ in R.REPETITION_RULES} <= codes
+    got = {r.stat: r.thresholds for r in R.RULES if r.stat in REPETITION_THRESHOLDS}
+    assert got == {stat: (t,) for stat, t in REPETITION_THRESHOLDS.items()}
 
 
 def test_fired_rules_thresholds():

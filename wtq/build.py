@@ -44,18 +44,12 @@ from pyspark.sql import functions as F
 from wtq.operators import curation as C
 from wtq.operators.classifier import nb_score, train_nb_weights
 from wtq.operators.dedup import LSH_BUCKET_CAP, dedup_resolution
-from wtq.pipeline import run_pipeline
+from wtq.pipeline import _host, run_pipeline
 
 # one url in BENCH_SLICE_MOD seeds the held-out benchmark slice when no
 # explicit benchmark is given (md5-bucketed — works for string ids,
 # unlike the numeric id-parity split of the standalone query demo)
 BENCH_SLICE_MOD = 101
-
-
-def _hash_bucket(col: str, mod: int):
-    return (
-        F.conv(F.substring(F.md5(F.col(col)), 1, 15), 16, 10).cast("long") % mod
-    )
 
 
 @contextmanager
@@ -206,9 +200,9 @@ def build_training_set(
 
         # 3. decontamination
         if benchmark is None:
-            bench_docs = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) == 0)
+            bench_docs = deduped.filter(C.md5_bucket("url", BENCH_SLICE_MOD) == 0)
             benchmark = C.benchmark_grams(bench_docs, "text")
-            candidates = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) != 0)
+            candidates = deduped.filter(C.md5_bucket("url", BENCH_SLICE_MOD) != 0)
         else:
             candidates = deduped
         hits = C.decontaminate(candidates, "url", "text", benchmark=benchmark)
@@ -217,7 +211,7 @@ def build_training_set(
         )
 
         # 4. per-host token budget (host = authority component of the url)
-        hosted = clean.withColumn("host", F.substring_index("url", "/", 3))
+        hosted = clean.withColumn("host", _host())
         sampled = C.token_budget_sample(
             hosted, "url", "text", "host", budget=token_budget
         ).select("url", "n_tokens")
@@ -234,11 +228,7 @@ def build_training_set(
         # urls — straddles with probability proportional to the bucket
         # split, and no split key fixes that (a content hash differs on
         # near-identical text too); only a tighter dedup threshold does.
-        bucket = _hash_bucket("url", 1000)
-        split = (
-            F.when(bucket < 980, "train").when(bucket < 990, "val").otherwise("test")
-        )
-        final = final.withColumn("split", split)
+        final = final.withColumn("split", C.split_label("url"))
         final.write.mode("overwrite").partitionBy("split").parquet(out_dir)
 
         # every stage frame is checkpointed/written at this point, so the

@@ -34,10 +34,10 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from wtq.operators.text import words_arr
+from wtq.operators.text import vocab_count, words_arr
 
 # ---- shared constants (Spark AND oracle SQL are generated from these) ----
 DECONTAM_K = 13          # n-gram size, the C4/GPT-3 decontamination convention
@@ -58,20 +58,36 @@ GATE_STOPWORD_MIN = 0.0575  # host-level stopword fraction below this → drop
                             # doubles would depend on reduction order)
 
 
+def md5_bucket(key: Column | str, mod: int) -> Column:
+    """The first 60 bits of md5(key) as an integer, mod `mod` — a pure
+    function of the key, the same in every engine (the oracle reads the
+    same 15 hex digits)."""
+    return F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long") % mod
+
+
+def split_label(key: Column | str) -> Column:
+    """'train' / 'val' / 'test' (98/1/1) by md5_bucket(key, 1000): the
+    leakage-safe split, stable across reruns, engines and cluster sizes."""
+    bucket = md5_bucket(key, 1000)
+    return F.when(bucket < 980, "train").when(bucket < 990, "val").otherwise("test")
+
+
+def _gram_digests(ws: Column) -> Column:
+    """md5 of every DECONTAM_K-word window of the word array `ws`, joined
+    by single spaces; callers keep only arrays of ≥ DECONTAM_K words."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size(ws) - (DECONTAM_K - 1)),
+        lambda i: F.md5(F.array_join(F.slice(ws, i, DECONTAM_K), " ")),
+    )
+
+
 def benchmark_grams(bench_df: DataFrame, text_col: str = "text") -> DataFrame:
     """All 13-gram md5 digests of a benchmark corpus — the side input
     `decontaminate` joins against.  Column: g (md5 hex)."""
     ws = bench_df.select(words_arr(F.col(text_col)).alias("ws")).filter(
         F.size("ws") >= DECONTAM_K
     )
-    return ws.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("ws") - (DECONTAM_K - 1)),
-                lambda i: F.md5(F.array_join(F.slice("ws", i, DECONTAM_K), " ")),
-            )
-        ).alias("g")
-    ).distinct()
+    return ws.select(F.explode(_gram_digests(F.col("ws"))).alias("g")).distinct()
 
 
 def decontaminate(
@@ -108,14 +124,7 @@ def decontaminate(
     if benchmark is None:
         bench = (
             ws.filter(F.col("doc") % BENCH_MOD == 0)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("ws") - (DECONTAM_K - 1)),
-                        lambda i: F.md5(F.array_join(F.slice("ws", i, DECONTAM_K), " ")),
-                    )
-                ).alias("g")
-            )
+            .select(F.explode(_gram_digests(F.col("ws"))).alias("g"))
             .distinct()
         )
         ws = ws.filter(F.col("doc") % BENCH_MOD != 0)
@@ -127,15 +136,7 @@ def decontaminate(
                 "with benchmark_grams(), or select the digest column first"
             )
         bench = benchmark.toDF("g")
-    grams = ws.select(
-        "doc",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("ws") - (DECONTAM_K - 1)),
-                lambda i: F.md5(F.array_join(F.slice("ws", i, DECONTAM_K), " ")),
-            )
-        ).alias("g"),
-    )
+    grams = ws.select("doc", F.explode(_gram_digests(F.col("ws"))).alias("g"))
     return (
         grams.join(F.broadcast(bench), "g")
         .groupBy(F.col("doc").alias(id_col))
@@ -307,19 +308,13 @@ def source_quality_gate(
     """
     from wtq.rules.lexicon import STOPWORDS
 
-    # membership via isin → codegen InSet hash lookup: O(1) per word
-    # instead of the interpreted O(|stopwords|) array_contains scan
-    # (round-6: measured 4.3× on the corpus-wide pass, value-identical)
-    stop_list = sorted(STOPWORDS)
     d = df.select(
         F.col(host_col).alias("host"),
         words_arr(F.col(text_col)).alias("ws"),
     ).select(
         "host",
         F.size("ws").alias("n_words"),
-        F.size(
-            F.filter("ws", lambda x: F.lower(x).isin(*stop_list))
-        ).alias("n_stop"),
+        vocab_count(F.col("ws"), STOPWORDS).alias("n_stop"),
     )
     agg = d.groupBy("host").agg(
         F.count("*").alias("n_docs"),
@@ -360,6 +355,11 @@ def strip_boilerplate_lines(
     order.  Unlike the keep/drop operators this REWRITES content from
     corpus-level statistics — the reference's tag-cleaning analog
     (water.lua:84-221) at corpus scope instead of per-record scope.
+
+    Precondition: `id_col` is unique per row (callers dedup first).  A
+    repeated id is neither merged nor rejected: each of its rows counts
+    as one more document in the line doc-frequency, and the rows share
+    one hot-line set in the rebuild.
 
     Returns (doc_id, clean_text, n_removed, *carry_cols) for every
     input document (clean_text = '' when every line was boilerplate);

@@ -26,6 +26,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -102,6 +104,14 @@ def _shingle_hashes(shingles) -> "list[int]":
     return out
 
 
+def _shingle_list(text) -> list[str]:
+    """The SHINGLE_K-word shingles of `text` in order, repeats kept —
+    empty for fewer than SHINGLE_K words.  Words split on single spaces
+    with empties removed, as words_arr and the oracle's _sql_shingles."""
+    words = [w for w in (text or "").split(" ") if w]
+    return [" ".join(words[i : i + SHINGLE_K]) for i in range(len(words) - SHINGLE_K + 1)]
+
+
 def _sig_batch(texts) -> list[list[int]]:
     """Vectorized minhash core (numpy): identical arithmetic to the SQL
     oracle — md5-hex→int60 mod P, then min over (a·h+b) mod P.
@@ -113,14 +123,11 @@ def _sig_batch(texts) -> list[list[int]]:
     out = []
     sentinel = [MINHASH_P] * N_PERM
     for t in texts:
-        words = [w for w in (t or "").split(" ") if w]
-        if len(words) < SHINGLE_K:
+        shingles = _shingle_list(t)
+        if not shingles:
             out.append(sentinel)
             continue
-        shingles = {
-            " ".join(words[i : i + SHINGLE_K]) for i in range(len(words) - SHINGLE_K + 1)
-        }
-        hs = np.array(_shingle_hashes(shingles), dtype=np.int64)
+        hs = np.array(_shingle_hashes(set(shingles)), dtype=np.int64)
         out.append(((A * hs + B) % MINHASH_P).min(axis=1).tolist())
     return out
 
@@ -247,32 +254,38 @@ def _pairs_from_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
     """Pair generation over a (doc, bucket) table — the back half of
     minhash_lsh_pairs, factored out so dedup_resolution can feed pair
     generation AND its occupancy audit from one materialized bucket
-    table instead of running the signature UDF twice.
-
-    One conditional explode handles both regimes without touching
-    the upstream subtree twice: the LEFT side of the pair is every
-    member for within-cap buckets but only the bucket minimum for
-    over-cap buckets — [min] × members = the star."""
-    grouped = (
-        buckets.groupBy("bucket")
-        .agg(F.collect_list("doc").alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    pairs = (
-        grouped.select(
-            F.explode(
-                F.when(F.size("docs") <= bucket_cap, F.col("docs")).otherwise(
-                    F.array(F.array_min("docs"))
-                )
-            ).alias("doc"),
-            F.col("docs"),
-        )
-        .select("doc", F.explode("docs").alias("doc2"))
-        .filter(F.col("doc") < F.col("doc2"))
-        .groupBy(F.col("doc").alias("doc1"), F.col("doc2"))
+    table instead of running the signature UDF twice."""
+    return (
+        _bucket_pairs(buckets, ["bucket"], F.col("doc"), bucket_cap)
+        .filter(F.col("a") < F.col("b"))
+        .groupBy(F.col("a").alias("doc1"), F.col("b").alias("doc2"))
         .agg(F.count("*").alias("n_shared_bands"))
     )
-    return pairs
+
+
+def _bucket_pairs(
+    rows: DataFrame, keys: list[str], member: Column, bucket_cap: int
+) -> DataFrame:
+    """(a, b) member pairs of every bucket of `rows` grouped by `keys`,
+    both orders and a == b included — the caller keeps a < b.  ONE
+    aggregation + double explode instead of a bucket self-join, which
+    would run the upstream signature UDF subtree twice.  One conditional
+    explode handles both regimes of LSH_BUCKET_CAP: the LEFT side of the
+    pair is every member for within-cap buckets but only the bucket
+    minimum for over-cap buckets — [min] × members = the star."""
+    grouped = (
+        rows.groupBy(*keys)
+        .agg(F.collect_list(member).alias("ms"))
+        .filter(F.size("ms") >= 2)
+    )
+    return grouped.select(
+        F.explode(
+            F.when(F.size("ms") <= bucket_cap, F.col("ms")).otherwise(
+                F.array(F.array_min("ms"))
+            )
+        ).alias("a"),
+        F.col("ms"),
+    ).select("a", F.explode("ms").alias("b"))
 
 
 def _minhash_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -723,14 +736,11 @@ def _simhash_batch(texts) -> list[int]:
     J = np.arange(SIMHASH_BITS, dtype=np.int64)
     out = []
     for t in texts:
-        words = [w for w in (t or "").split(" ") if w]
-        if len(words) < SHINGLE_K:
+        shingles = _shingle_list(t)
+        if not shingles:
             out.append(None)
             continue
-        counts: dict[str, int] = {}
-        for i in range(len(words) - SHINGLE_K + 1):
-            s = " ".join(words[i : i + SHINGLE_K])
-            counts[s] = counts.get(s, 0) + 1
+        counts = Counter(shingles)
         hs = np.fromiter((_md5_60(s) for s in counts), dtype=np.int64, count=len(counts))
         cnt = np.fromiter(counts.values(), dtype=np.int64, count=len(counts))
         bits = (hs[None, :] >> J[:, None]) & 1
@@ -984,27 +994,9 @@ def simhash_near_pairs(
         "simhash",
         F.explode(F.when(F.col("simhash").isNotNull(), band_array)).alias("bc"),
     ).select("doc", "simhash", F.col("bc.band").alias("band"), F.col("bc.chunk").alias("chunk"))
-    # within-bucket pairs via one aggregation + double explode — a
-    # bucket self-join would re-run the signature UDF subtree twice
-    # (see minhash_lsh_pairs for the rationale and reference citation)
-    grouped = (
-        chunks.groupBy("band", "chunk")
-        .agg(F.collect_list(F.struct("doc", "simhash")).alias("ms"))
-        .filter(F.size("ms") >= 2)
-    )
-    # LEFT side: every member within cap, only the bucket minimum
-    # above it ([min] × members = the star rule; min struct = min doc
-    # since doc leads the struct and is unique)
+    # min struct = min doc: doc leads the struct and is unique
     return (
-        grouped.select(
-            F.explode(
-                F.when(F.size("ms") <= bucket_cap, F.col("ms")).otherwise(
-                    F.array(F.array_min("ms"))
-                )
-            ).alias("a"),
-            F.col("ms"),
-        )
-        .select("a", F.explode("ms").alias("b"))
+        _bucket_pairs(chunks, ["band", "chunk"], F.struct("doc", "simhash"), bucket_cap)
         .filter(F.col("a.doc") < F.col("b.doc"))
         .select(
             F.col("a.doc").alias("doc1"),

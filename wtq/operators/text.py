@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from wtq.rules import registry as R
 from wtq.rules.lexicon import LANG_WORDS, STOPWORDS
 
 # Word chars runs OR single non-word non-space char — a BPE-ish
@@ -23,6 +24,9 @@ BPE_TOKEN_RE = "[a-zA-Z0-9]+|[^a-zA-Z0-9 ]"
 
 _MARKER_LANGS = ("en", "fr", "es", "de")
 
+# the Q-4 symbol set as one regex char class (Java and RE2 read it alike)
+_SYMBOL_CLASS = "[" + R.SYMBOLS + "]"
+
 
 def words_arr(text: Column) -> Column:
     """Whitespace tokens, empties removed — the one Spark tokenization
@@ -30,18 +34,22 @@ def words_arr(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda w: w != "")
 
 
+def vocab_count(words: Column, vocab) -> Column:
+    """How many of `words` are in `vocab`, case-insensitively.  isin
+    compiles to a codegen InSet hash lookup (round-6; value-identical to
+    the interpreted array_contains scan, ~4× faster per word)."""
+    return F.size(F.filter(words, lambda w: F.lower(w).isin(*sorted(set(vocab)))))
+
+
 def _stat_cols(t: Column) -> dict[str, Column]:
     words = words_arr(t)
     n = F.size(words)
     nw = F.greatest(n, F.lit(1)).cast("double")
-    # isin → codegen InSet hash lookup (round-6; value-identical to the
-    # interpreted array_contains scan, ~4× faster per word)
-    stop_list = sorted(STOPWORDS)
     return {
         "n_words": n,
         "mean_word_len": F.aggregate(words, F.lit(0).cast("long"), lambda a, w: a + F.length(w)).cast("double") / nw,
-        "stopword_frac": F.size(F.filter(words, lambda w: F.lower(w).isin(*stop_list))).cast("double") / nw,
-        "symbol_frac": (F.length(t) - F.length(F.regexp_replace(t, "[#$%&*+<=>@^_|~]", ""))).cast("double") / nw,
+        "stopword_frac": vocab_count(words, STOPWORDS).cast("double") / nw,
+        "symbol_frac": (F.length(t) - F.length(F.regexp_replace(t, _SYMBOL_CLASS, ""))).cast("double") / nw,
     }
 
 
@@ -49,13 +57,7 @@ def lang_markers(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Marker-word language ID: count per-language function words,
     argmax with fixed tie-break order (en,fr,es,de)."""
     words = words_arr(F.col(text_col))
-
-    def _marker_count(marker_list):
-        return F.size(F.filter(words, lambda w: F.lower(w).isin(*marker_list)))
-
-    counts = {}
-    for lang in _MARKER_LANGS:
-        counts[lang] = _marker_count(sorted(set(LANG_WORDS[lang])))
+    counts = {lang: vocab_count(words, LANG_WORDS[lang]) for lang in _MARKER_LANGS}
     best = F.greatest(*[counts[lang] for lang in _MARKER_LANGS])
     pred = F.when(counts["en"] == best, "en")
     for lang in _MARKER_LANGS[1:]:
@@ -105,7 +107,7 @@ def _sql_stats(text_col: str) -> dict[str, str]:
         "n_words": f"len({w})",
         "mean_word_len": f"CAST(list_sum(list_transform({w}, x -> length(x))) AS DOUBLE) / greatest(len({w}), 1)",
         "stopword_frac": f"CAST(len(list_filter({w}, x -> list_contains([{stop_list}], lower(x)))) AS DOUBLE) / greatest(len({w}), 1)",
-        "symbol_frac": f"CAST(length({text_col}) - length(regexp_replace({text_col}, '[#$%&*+<=>@^_|~]', '', 'g')) AS DOUBLE) / greatest(len({w}), 1)",
+        "symbol_frac": f"CAST(length({text_col}) - length(regexp_replace({text_col}, '{_SYMBOL_CLASS}', '', 'g')) AS DOUBLE) / greatest(len({w}), 1)",
     }
 
 
@@ -213,11 +215,13 @@ def sql_html_to_text(table: str, id_col: str, html_col: str) -> str:
 # re-crawl window dedup, which keys on exact url equality.  All steps
 # are engine-portable expressions; the canonical form is:
 #   lowercase scheme+authority · default ports stripped · fragment
-#   dropped · tracking params (utm_*, fbclid, gclid, ref) dropped ·
+#   dropped · tracking params (utm_*, fbclid, gclid) dropped ·
 #   remaining query params sorted · single trailing slash stripped.
 
 _SCHEME_AUTH_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*"
-_TRACKING_RE = "^(utm_[A-Za-z0-9]+|fbclid|gclid|ref)="
+# `ref=` is not among them: sites use it for content (a referral code,
+# a git ref, a paper reference), so dropping it could merge distinct pages
+_TRACKING_RE = "^(utm_[A-Za-z0-9]+|fbclid|gclid)="
 
 
 def normalize_url_col(url: Column) -> Column:

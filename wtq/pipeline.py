@@ -97,34 +97,23 @@ def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     return df.repartition(num_partitions, F.col("url"))
 
 
-def decide(
-    pages: DataFrame,
-    num_partitions: int | None = None,
-    dedup: bool = True,
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Full per-document decision DF.
-
-    Columns: url, warc_ts, lang, text (scrubbed), n_words, pred_lang,
-    ppl, scrub-edit counts, partition_id, fired_rules array<string>
-    (sorted), keep boolean.
-
-    Plan shape (one wide exchange total): parquet scan pruned to
-    (url, warc_ts, text, lang) — the html payload never enters a
-    shuffle — → salted murmur3(url) repartition → window dedup (reuses
-    the exchange: ClusteredDistribution(url) already satisfied) →
-    Arrow score pass → threshold expressions (codegen).
-
-    `carry_cols` are extra input columns (e.g. curation-lineage
-    counters added by a pre-pass) that ride through unchanged into the
-    output projection.
-    """
-    pages = pages.select("url", "warc_ts", "text", "lang", *carry_cols)
+def _latest_pages(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """The pipeline prefix: parquet scan pruned to (url, warc_ts, text,
+    lang) — the html payload never enters a shuffle — → salted
+    murmur3(url) repartition → window dedup (reuses the exchange:
+    ClusteredDistribution(url) already satisfied)."""
+    pages = pages.select("url", "warc_ts", "text", "lang")
     if num_partitions:
         pages = salted_repartition(pages, num_partitions)
-    if dedup:
-        pages = dedup_recrawls(pages)
+    return dedup_recrawls(pages)
 
+
+def _score(pages: DataFrame) -> DataFrame:
+    """The scoring step over deduplicated pages: Arrow score pass →
+    threshold expressions (codegen).  Columns other than (url, warc_ts,
+    text, lang) — e.g. curation-lineage counters added by a pre-pass —
+    ride through unchanged into the output projection."""
+    carry = [c for c in pages.columns if c not in ("url", "warc_ts", "text", "lang")]
     scored = pages.withColumn("__s", score_udf(F.col("text")))
     s = F.col("__s")
     # NULL scrubbed = "no edits" sentinel from score_udf — the
@@ -154,10 +143,23 @@ def decide(
             (s["n_email"] + s["n_phone"] + s["n_ip"] + s["n_profanity"]).alias("n_scrub_edits"),
             F.spark_partition_id().alias("partition_id"),
             fired.alias("fired_rules"),
-            *[F.col(c) for c in carry_cols],
+            *carry,
         )
         .withColumn("keep", F.size("fired_rules") == 0)
     )
+
+
+def decide(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """Full per-document decision DF: ``_score(_latest_pages(...))``.
+
+    Columns: url, warc_ts, lang, text (scrubbed), n_words, pred_lang,
+    ppl, scrub-edit counts, partition_id, fired_rules array<string>
+    (sorted), keep boolean.
+
+    Plan shape: one wide exchange (the salted repartition) and one
+    Arrow score pass.
+    """
+    return _score(_latest_pages(pages, num_partitions))
 
 
 def decisions_view(decided: DataFrame) -> DataFrame:
@@ -270,14 +272,10 @@ def run_pipeline(
         from wtq.operators.text import normalize_url_col
 
         pages = pages.withColumn("url", normalize_url_col(F.col("url")))
-    carry: tuple[str, ...] = ()
     if strip_boilerplate:
         from wtq.operators.curation import strip_boilerplate_lines
 
-        base = pages.select("url", "warc_ts", "text", "lang")
-        if num_partitions:
-            base = salted_repartition(base, num_partitions)
-        base = dedup_recrawls(base)
+        base = _latest_pages(pages, num_partitions)
         # two strip consumers (digest pass + rebuild) would otherwise
         # re-execute the scan + window-dedup subtree; materialize once
         # (round-6: measured 18.5s → 13.9s on strip+decide at sf1.0).
@@ -294,9 +292,7 @@ def run_pipeline(
             .withColumnRenamed("clean_text", "text")
             .withColumnRenamed("n_removed", "n_boiler_removed")
         )
-        carry = ("n_boiler_removed",)
-        # repartition/dedup already applied above
-        decided = decide(base, num_partitions=None, dedup=False, carry_cols=carry)
+        decided = _score(base)
     else:
         decided = decide(pages, num_partitions=num_partitions)
 

@@ -13,10 +13,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from wtq.operators import classifier as CL
+from wtq.operators import curation as C
 from wtq.operators import dedup as D
 from wtq.operators import similarity as S
 from wtq.operators import spatial as G
@@ -97,6 +98,21 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
+def _revenue() -> Column:
+    """sum(l_extendedprice · (1 − l_discount)) in exact decimals, as a
+    double rounded to cents the way DuckDB's round(double, 2) does:
+    round(x · 100) / 100.  Spark's round(x, 2) rounds the double's
+    shortest decimal form half-up instead, so a half-way sum such as
+    4958901.2250 (stored as 4958901.22499999963…) gave .23 where
+    DuckDB gives .22; x · 100 carries the binary value's side of the
+    half, and round(·, 0) of a double agrees with C's round()."""
+    total = F.sum(
+        F.col("l_extendedprice").cast("decimal(18,4)")
+        * (1 - F.col("l_discount").cast("decimal(18,4)"))
+    ).cast("double")
+    return F.round(total * 100, 0) / 100
+
+
 def q_region_revenue(spark, sf_dir):
     """J5 multi-way join with broadcast dims (proccess_data.sql:459-461).
 
@@ -120,7 +136,7 @@ def q_region_revenue(spark, sf_dir):
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("r_name", "n_name")
         .agg(
-            F.round(F.sum(F.col("l_extendedprice").cast("decimal(18,4)") * (1 - F.col("l_discount").cast("decimal(18,4)"))).cast("double"), 2).alias("revenue"),
+            _revenue().alias("revenue"),
             F.count("*").alias("n_items"),
         )
     )
@@ -673,18 +689,8 @@ def q_rule_metrics(spark, sf_dir):
     separate: it is a different physical shape (explode + two-level
     agg), not a scalar projection."""
     d = _t(spark, sf_dir, "documents")
-    words = X.words_arr(F.col("text"))
-    n = F.size(words)
-    nw = F.greatest(n, F.lit(1))
-    # isin → codegen InSet hash lookup (round-6; value-identical to the
-    # interpreted array_contains scan, ~4× faster per word)
-    stop_list = sorted(STOPWORDS)
-    stop_frac = F.size(
-        F.filter(words, lambda w: F.lower(w).isin(*stop_list))
-    ).cast("double") / nw
-    mean = F.aggregate(words, F.lit(0).cast("long"), lambda a, w: a + F.length(w)).cast(
-        "double"
-    ) / nw
+    s = X._stat_cols(F.col("text"))
+    n, stop_frac, mean = s["n_words"], s["stopword_frac"], s["mean_word_len"]
     return d.select(
         "doc_id",
         n.alias("n_words"),
@@ -749,12 +755,9 @@ def q_doc_decisions(spark, sf_dir):
     """Single-pass rule battery + err_all rollup on documents (U3 note:
     all CASEs evaluated in one scan, codes joined as one string)."""
     d = _t(spark, sf_dir, "documents")
-    words = X.words_arr(F.col("text"))
-    n = F.size(words)
-    nw = F.greatest(n, F.lit(1)).cast("double")
-    stop_list = sorted(STOPWORDS)
-    stop_frac = F.size(F.filter(words, lambda w: F.lower(w).isin(*stop_list))) / nw
-    mean = F.aggregate(words, F.lit(0).cast("long"), lambda a, w: a + F.length(w)) / nw
+    s = X._stat_cols(F.col("text"))
+    n, stop_frac, mean = s["n_words"], s["stopword_frac"], s["mean_word_len"]
+    # its own Q-3 ladder: the frozen SQL has no n_words > 0 guard
     codes = F.concat_ws(
         ",",
         F.when(n < R.MIN_WORDS, "Q-1"),
@@ -874,7 +877,7 @@ def q_cust_supp_nation_matrix(spark, sf_dir):
         .join(F.broadcast(n1), c.c_nationkey == F.col("cnk"))
         .join(F.broadcast(n2), su.s_nationkey == F.col("snk"))
         .groupBy("cust_nation", "supp_nation")
-        .agg(F.round(F.sum(F.col("l_extendedprice").cast("decimal(18,4)") * (1 - F.col("l_discount").cast("decimal(18,4)"))).cast("double"), 2).alias("revenue"))
+        .agg(_revenue().alias("revenue"))
     )
 
 
@@ -1140,13 +1143,7 @@ def q_dataset_split_counts(spark, sf_dir):
     md5-derived 60-bit int mod 1000, reproducible bit-for-bit in the
     oracle."""
     d = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10).cast("long")
-        % 1000
-    )
-    split = (
-        F.when(bucket < 980, "train").when(bucket < 990, "val").otherwise("test")
-    )
+    split = C.split_label(F.col("doc_id").cast("string"))
     return d.groupBy(split.alias("split")).agg(
         F.count("*").alias("n"),
         F.countDistinct("lang").alias("n_langs"),
@@ -1361,8 +1358,6 @@ def q_decontaminate(spark, sf_dir):
     """Benchmark 13-gram decontamination (C4/GPT-3 protocol): flag
     corpus docs sharing any 13-gram with the self-contained benchmark
     set.  Broadcast semi-join on md5(gram) digests — J7/J11 shapes."""
-    from wtq.operators import curation as C
-
     return C.decontaminate(_t(spark, sf_dir, "documents"))
 
 
@@ -1370,8 +1365,6 @@ def q_incremental_corpus_dedup(spark, sf_dir):
     """Crawl-vs-corpus incremental dedup: left-anti on content
     fingerprints (the J7 'already reported' filter) + min-id
     representative per novel fingerprint within the new batch."""
-    from wtq.operators import curation as C
-
     return C.incremental_corpus_dedup(_t(spark, sf_dir, "documents"))
 
 
@@ -1379,16 +1372,12 @@ def q_token_budget_sample(spark, sf_dir):
     """Per-host token-budget sampling: hash-priority running sum
     (partitioned ROWS-frame window — never a global sort) cut at the
     budget.  The domain-quota step of a training-mix build."""
-    from wtq.operators import curation as C
-
     return C.token_budget_sample(_t(spark, sf_dir, "documents"))
 
 
 def q_source_quality_gate(spark, sf_dir):
     """Domain-level quality gate: per-host aggregate signals →
     keep/drop verdict per host (broadcast-sized output)."""
-    from wtq.operators import curation as C
-
     return C.source_quality_gate(_t(spark, sf_dir, "documents"))
 
 
@@ -1399,8 +1388,6 @@ def q_strip_boilerplate(spark, sf_dir):
     engines first chunk each text into 10-word pseudo-lines with the
     identical derivation; the operator itself runs on real newline
     lines (planted-case tests use the pages corpus shape)."""
-    from wtq.operators import curation as C
-
     d = _t(spark, sf_dir, "documents")
     n = C.BOILERPLATE_CHUNK_WORDS
     ws = X.words_arr(F.col("text"))  # the shared tokenization the oracle mirrors
@@ -1624,13 +1611,11 @@ from wtq.streaming.ingest import SQL_STREAM_DEDUP_JOIN_COUNTS as _sql_sdedup  # 
 
 ORACLE_SQL["stream_dedup_join_counts"] = _sql_sdedup
 
-from wtq.operators import curation as _C  # noqa: E402
-
-ORACLE_SQL["decontaminate"] = _C.SQL_DECONTAMINATE
-ORACLE_SQL["incremental_corpus_dedup"] = _C.SQL_INCREMENTAL_CORPUS_DEDUP
-ORACLE_SQL["token_budget_sample"] = _C.SQL_TOKEN_BUDGET_SAMPLE
-ORACLE_SQL["source_quality_gate"] = _C._sql_source_quality_gate(_STOP_SQL)
-ORACLE_SQL["strip_boilerplate"] = _C.SQL_STRIP_BOILERPLATE
+ORACLE_SQL["decontaminate"] = C.SQL_DECONTAMINATE
+ORACLE_SQL["incremental_corpus_dedup"] = C.SQL_INCREMENTAL_CORPUS_DEDUP
+ORACLE_SQL["token_budget_sample"] = C.SQL_TOKEN_BUDGET_SAMPLE
+ORACLE_SQL["source_quality_gate"] = C._sql_source_quality_gate(_STOP_SQL)
+ORACLE_SQL["strip_boilerplate"] = C.SQL_STRIP_BOILERPLATE
 
 # ---------------------------------------------------------------------------
 # EXTRA registry: ops beyond the 50-entry driver cap.  The external

@@ -57,7 +57,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from wtq.rules import registry as R
-from wtq.rules.lexicon import STOPWORDS
+
 
 def fired_rules_expr(
     stats: dict[str, Column],
@@ -66,32 +66,10 @@ def fired_rules_expr(
     profanity_hits: Column,
 ) -> Column:
     """array<string> of fired rule codes, sorted — the err_all analog
-    (proccess_data.sql:814-841) built in ONE pass per record."""
-    checks = [
-        (stats["n_words"] < R.MIN_WORDS, "Q-1"),
-        (stats["n_words"] > R.MAX_WORDS, "Q-2"),
-        (
-            (stats["n_words"] > 0)
-            & (
-                (stats["mean_word_len"] < R.MIN_MEAN_WORD_LEN)
-                | (stats["mean_word_len"] > R.MAX_MEAN_WORD_LEN)
-            ),
-            "Q-3",
-        ),
-        (stats["symbol_ratio"] > R.SYMBOL_WORD_RATIO_MAX, "Q-4"),
-        (stats["stopword_frac"] < R.STOPWORD_FRAC_MIN, "Q-6"),
-        (stats["rep_line_frac"] > R.REP_LINE_FRAC_MAX, "Q-7"),
-        (stats["bullet_frac"] > R.BULLET_LINE_FRAC_MAX, "Q-8"),
-        (stats["ellipsis_frac"] > R.ELLIPSIS_LINE_FRAC_MAX, "Q-9"),
-        (stats["top_word_frac"] > R.TOP_WORD_FRAC_MAX, "Q-10"),
-        (stats["brace_line_frac"] > R.BRACE_LINE_FRAC_MAX, "Q-11"),
-        (stats["has_lorem"] > 0, "Q-12"),
-        *[(stats[field] > thresh, code) for code, field, thresh in R.REPETITION_RULES],
-        (lang_mismatch, "L-1"),
-        (ppl > R.PPL_MAX, "P-1"),
-        (profanity_hits >= R.PROFANITY_MIN_HITS, "T-1"),
-    ]
-    arr = F.array(*[F.when(cond, F.lit(code)) for cond, code in checks])
+    (proccess_data.sql:814-841) built in ONE pass per record: every
+    ``registry.RULES`` predicate over the column stats."""
+    s = {**stats, "lang_mismatch": lang_mismatch, "ppl": ppl, "profanity_hits": profanity_hits}
+    arr = F.array(*[F.when(r.fires(s), F.lit(r.code)) for r in R.RULES])
     return F.array_sort(F.filter(arr, lambda x: x.isNotNull()))
 
 
@@ -190,38 +168,7 @@ def py_fired_rules(
     ppl: float,
     profanity_hits: int,
 ) -> list[str]:
-    fired = []
-    if stats["n_words"] < R.MIN_WORDS:
-        fired.append("Q-1")
-    if stats["n_words"] > R.MAX_WORDS:
-        fired.append("Q-2")
-    if stats["n_words"] > 0 and not (
-        R.MIN_MEAN_WORD_LEN <= stats["mean_word_len"] <= R.MAX_MEAN_WORD_LEN
-    ):
-        fired.append("Q-3")
-    if stats["symbol_ratio"] > R.SYMBOL_WORD_RATIO_MAX:
-        fired.append("Q-4")
-    if stats["stopword_frac"] < R.STOPWORD_FRAC_MIN:
-        fired.append("Q-6")
-    if stats["rep_line_frac"] > R.REP_LINE_FRAC_MAX:
-        fired.append("Q-7")
-    if stats["bullet_frac"] > R.BULLET_LINE_FRAC_MAX:
-        fired.append("Q-8")
-    if stats["ellipsis_frac"] > R.ELLIPSIS_LINE_FRAC_MAX:
-        fired.append("Q-9")
-    if stats["top_word_frac"] > R.TOP_WORD_FRAC_MAX:
-        fired.append("Q-10")
-    if stats["brace_line_frac"] > R.BRACE_LINE_FRAC_MAX:
-        fired.append("Q-11")
-    if stats["has_lorem"] > 0:
-        fired.append("Q-12")
-    for code, field, thresh in R.REPETITION_RULES:
-        if stats[field] > thresh:
-            fired.append(code)
-    if lang_mismatch:
-        fired.append("L-1")
-    if ppl > R.PPL_MAX:
-        fired.append("P-1")
-    if profanity_hits >= R.PROFANITY_MIN_HITS:
-        fired.append("T-1")
-    return sorted(fired)
+    """The sorted fired codes for one document's scalar stats: the same
+    ``registry.RULES`` predicates ``fired_rules_expr`` compiles."""
+    s = {**stats, "lang_mismatch": lang_mismatch, "ppl": ppl, "profanity_hits": profanity_hits}
+    return sorted(r.code for r in R.RULES if r.fires(s))

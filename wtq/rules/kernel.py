@@ -221,7 +221,7 @@ def _line_stats(texts: Sequence[str], ltexts: Sequence[str]) -> tuple[np.ndarray
         lines = H.py_lines(text)
         n_bullet = n_ellipsis = n_brace = 0
         for l in lines:
-            if l.startswith(("- ", "* ", "•")):
+            if l.startswith(R.BULLET_PREFIXES):
                 n_bullet += 1
             if l.endswith("..."):
                 n_ellipsis += 1

@@ -18,8 +18,6 @@ from functools import lru_cache
 
 from wtq.rules.lexicon import CONTENT_WORDS, LANG_WORDS
 
-_ORDER = 3
-
 # Per-doc cost cap: perplexity is taken over the first MAX_WORDS words,
 # which keeps Arrow batches balanced (cf. st_subdivide, SURVEY.md §4).
 MAX_WORDS = 400

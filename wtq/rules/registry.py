@@ -11,45 +11,9 @@ per document and ``keep = (no rule fired)``.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass
-
-
-@dataclass(frozen=True)
-class Rule:
-    code: str
-    name: str
-    description: str
-
-
-# Gopher/C4-style heuristic battery. Codes are stable API — tests and
-# golden fixtures reference them by code, mirroring how the reference's
-# web UI and err_all reference '6-2'…'6-55'.
-RULES: list[Rule] = [
-    Rule("Q-1", "word_count_low", "fewer than MIN_WORDS words after scrubbing"),
-    Rule("Q-2", "word_count_high", "more than MAX_WORDS words"),
-    Rule("Q-3", "mean_word_len", "mean word length outside [MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN]"),
-    Rule("Q-4", "symbol_ratio", "symbol-to-word ratio above SYMBOL_WORD_RATIO_MAX"),
-    Rule("Q-6", "stopword_density", "stopword fraction below STOPWORD_FRAC_MIN (non-linguistic text)"),
-    Rule("Q-7", "repeated_lines", "duplicate-line character fraction above REP_LINE_FRAC_MAX (boilerplate)"),
-    Rule("Q-8", "bullet_lines", "fraction of bullet-point lines above BULLET_LINE_FRAC_MAX"),
-    Rule("Q-9", "ellipsis_lines", "fraction of lines ending in ellipsis above ELLIPSIS_LINE_FRAC_MAX"),
-    Rule("Q-10", "top_word_frac", "most frequent word exceeds TOP_WORD_FRAC_MAX of all words"),
-    Rule("Q-11", "code_braces", "fraction of lines containing curly braces above BRACE_LINE_FRAC_MAX (code/markup spill — C4's '{' filter)"),
-    Rule("Q-12", "lorem_ipsum", "contains the 'lorem ipsum' placeholder phrase (C4 filler filter)"),
-    Rule("Q-13", "dup_paragraphs", "duplicate-paragraph character fraction above 0.20 (Gopher repetition family)"),
-    Rule("Q-14", "top_2gram", "top word-2-gram character fraction above 0.20 (Gopher)"),
-    Rule("Q-15", "top_3gram", "top word-3-gram character fraction above 0.18 (Gopher)"),
-    Rule("Q-16", "top_4gram", "top word-4-gram character fraction above 0.16 (Gopher)"),
-    Rule("Q-17", "dup_5gram", "duplicate word-5-gram character fraction above 0.15 (Gopher)"),
-    Rule("Q-18", "dup_6gram", "duplicate word-6-gram character fraction above 0.14 (Gopher)"),
-    Rule("Q-19", "dup_7gram", "duplicate word-7-gram character fraction above 0.13 (Gopher)"),
-    Rule("Q-20", "dup_8gram", "duplicate word-8-gram character fraction above 0.12 (Gopher)"),
-    Rule("Q-21", "dup_9gram", "duplicate word-9-gram character fraction above 0.11 (Gopher)"),
-    Rule("Q-22", "dup_10gram", "duplicate word-10-gram character fraction above 0.10 (Gopher)"),
-    Rule("L-1", "lang_mismatch", "language-ID prediction disagrees with the crawl lang label"),
-    Rule("P-1", "perplexity", "character-n-gram perplexity above PPL_MAX (gibberish)"),
-    Rule("T-1", "toxicity", "profanity-lexicon hit count at/above PROFANITY_MIN_HITS"),
-]
+from typing import Any
 
 # Thresholds (single source of truth for pipeline AND oracle).
 MIN_WORDS = 20
@@ -72,27 +36,87 @@ BRACE_LINE_FRAC_MAX = 0.10
 PPL_MAX = 24.0
 PROFANITY_MIN_HITS = 1
 
-# Gopher repetition family (Rae et al. 2021 Table A1 thresholds).
-# Single source of truth: BOTH fired_rules_expr (Spark) and
-# py_fired_rules (oracle) iterate this table, so a rule added here is
-# automatically evaluated on both sides of the differential.
-REPETITION_RULES: list[tuple[str, str, float]] = [
-    ("Q-13", "dup_para_frac", 0.20),
-    ("Q-14", "top_2gram_frac", 0.20),
-    ("Q-15", "top_3gram_frac", 0.18),
-    ("Q-16", "top_4gram_frac", 0.16),
-    ("Q-17", "dup_5gram_frac", 0.15),
-    ("Q-18", "dup_6gram_frac", 0.14),
-    ("Q-19", "dup_7gram_frac", 0.13),
-    ("Q-20", "dup_8gram_frac", 0.12),
-    ("Q-21", "dup_9gram_frac", 0.11),
-    ("Q-22", "dup_10gram_frac", 0.10),
-]
-
-# Symbol set for Q-4 (exact char set — both engines count via translate)
+# Symbol set for Q-4: the kernel and text._stat_cols each count it as one
+# regex char class built from this string
 SYMBOLS = "#$%&*+<=>@^_|~"
 
 BULLET_PREFIXES = ("- ", "* ", "•")
+
+
+@dataclass(frozen=True)
+class Rule:
+    """One quality rule.  `fires` is its predicate over a stats mapping
+    (the STAT_FIELDS plus ``lang_mismatch``, ``ppl`` and
+    ``profanity_hits``), written with ``<``, ``>``, ``>=``, ``&`` and
+    ``|`` only, so the one lambda builds a Spark ``Column`` over column
+    stats (``fired_rules_expr``) and evaluates Python or numpy scalars
+    (``py_fired_rules``).  `stat` is the value it compares and
+    `thresholds` the boundaries where `fires` flips."""
+
+    code: str
+    name: str
+    description: str
+    stat: str
+    thresholds: tuple[float, ...]
+    fires: Callable[[Mapping[str, Any]], Any]
+
+
+# Gopher/C4-style heuristic battery. Codes are stable API — tests and
+# golden fixtures reference them by code, mirroring how the reference's
+# web UI and err_all reference '6-2'…'6-55'.  The Gopher repetition
+# family (Q-13…Q-22) uses the Rae et al. 2021 Table A1 thresholds.
+RULES: list[Rule] = [
+    Rule("Q-1", "word_count_low", "fewer than MIN_WORDS words after scrubbing",
+         "n_words", (MIN_WORDS,), lambda s: s["n_words"] < MIN_WORDS),
+    Rule("Q-2", "word_count_high", "more than MAX_WORDS words",
+         "n_words", (MAX_WORDS,), lambda s: s["n_words"] > MAX_WORDS),
+    Rule("Q-3", "mean_word_len", "mean word length outside [MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN]",
+         "mean_word_len", (MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN),
+         lambda s: (s["n_words"] > 0)
+         & ((s["mean_word_len"] < MIN_MEAN_WORD_LEN) | (s["mean_word_len"] > MAX_MEAN_WORD_LEN))),
+    Rule("Q-4", "symbol_ratio", "symbol-to-word ratio above SYMBOL_WORD_RATIO_MAX",
+         "symbol_ratio", (SYMBOL_WORD_RATIO_MAX,), lambda s: s["symbol_ratio"] > SYMBOL_WORD_RATIO_MAX),
+    Rule("Q-6", "stopword_density", "stopword fraction below STOPWORD_FRAC_MIN (non-linguistic text)",
+         "stopword_frac", (STOPWORD_FRAC_MIN,), lambda s: s["stopword_frac"] < STOPWORD_FRAC_MIN),
+    Rule("Q-7", "repeated_lines", "duplicate-line character fraction above REP_LINE_FRAC_MAX (boilerplate)",
+         "rep_line_frac", (REP_LINE_FRAC_MAX,), lambda s: s["rep_line_frac"] > REP_LINE_FRAC_MAX),
+    Rule("Q-8", "bullet_lines", "fraction of bullet-point lines above BULLET_LINE_FRAC_MAX",
+         "bullet_frac", (BULLET_LINE_FRAC_MAX,), lambda s: s["bullet_frac"] > BULLET_LINE_FRAC_MAX),
+    Rule("Q-9", "ellipsis_lines", "fraction of lines ending in ellipsis above ELLIPSIS_LINE_FRAC_MAX",
+         "ellipsis_frac", (ELLIPSIS_LINE_FRAC_MAX,), lambda s: s["ellipsis_frac"] > ELLIPSIS_LINE_FRAC_MAX),
+    Rule("Q-10", "top_word_frac", "most frequent word exceeds TOP_WORD_FRAC_MAX of all words",
+         "top_word_frac", (TOP_WORD_FRAC_MAX,), lambda s: s["top_word_frac"] > TOP_WORD_FRAC_MAX),
+    Rule("Q-11", "code_braces", "fraction of lines containing curly braces above BRACE_LINE_FRAC_MAX (code/markup spill — C4's '{' filter)",
+         "brace_line_frac", (BRACE_LINE_FRAC_MAX,), lambda s: s["brace_line_frac"] > BRACE_LINE_FRAC_MAX),
+    Rule("Q-12", "lorem_ipsum", "contains the 'lorem ipsum' placeholder phrase (C4 filler filter)",
+         "has_lorem", (0.0,), lambda s: s["has_lorem"] > 0),
+    Rule("Q-13", "dup_paragraphs", "duplicate-paragraph character fraction above 0.20 (Gopher repetition family)",
+         "dup_para_frac", (0.20,), lambda s: s["dup_para_frac"] > 0.20),
+    Rule("Q-14", "top_2gram", "top word-2-gram character fraction above 0.20 (Gopher)",
+         "top_2gram_frac", (0.20,), lambda s: s["top_2gram_frac"] > 0.20),
+    Rule("Q-15", "top_3gram", "top word-3-gram character fraction above 0.18 (Gopher)",
+         "top_3gram_frac", (0.18,), lambda s: s["top_3gram_frac"] > 0.18),
+    Rule("Q-16", "top_4gram", "top word-4-gram character fraction above 0.16 (Gopher)",
+         "top_4gram_frac", (0.16,), lambda s: s["top_4gram_frac"] > 0.16),
+    Rule("Q-17", "dup_5gram", "duplicate word-5-gram character fraction above 0.15 (Gopher)",
+         "dup_5gram_frac", (0.15,), lambda s: s["dup_5gram_frac"] > 0.15),
+    Rule("Q-18", "dup_6gram", "duplicate word-6-gram character fraction above 0.14 (Gopher)",
+         "dup_6gram_frac", (0.14,), lambda s: s["dup_6gram_frac"] > 0.14),
+    Rule("Q-19", "dup_7gram", "duplicate word-7-gram character fraction above 0.13 (Gopher)",
+         "dup_7gram_frac", (0.13,), lambda s: s["dup_7gram_frac"] > 0.13),
+    Rule("Q-20", "dup_8gram", "duplicate word-8-gram character fraction above 0.12 (Gopher)",
+         "dup_8gram_frac", (0.12,), lambda s: s["dup_8gram_frac"] > 0.12),
+    Rule("Q-21", "dup_9gram", "duplicate word-9-gram character fraction above 0.11 (Gopher)",
+         "dup_9gram_frac", (0.11,), lambda s: s["dup_9gram_frac"] > 0.11),
+    Rule("Q-22", "dup_10gram", "duplicate word-10-gram character fraction above 0.10 (Gopher)",
+         "dup_10gram_frac", (0.10,), lambda s: s["dup_10gram_frac"] > 0.10),
+    Rule("L-1", "lang_mismatch", "language-ID prediction disagrees with the crawl lang label",
+         "lang_mismatch", (), lambda s: s["lang_mismatch"]),
+    Rule("P-1", "perplexity", "character-n-gram perplexity above PPL_MAX (gibberish)",
+         "ppl", (PPL_MAX,), lambda s: s["ppl"] > PPL_MAX),
+    Rule("T-1", "toxicity", "profanity-lexicon hit count at/above PROFANITY_MIN_HITS",
+         "profanity_hits", (PROFANITY_MIN_HITS,), lambda s: s["profanity_hits"] >= PROFANITY_MIN_HITS),
+]
 
 
 def rule_rows() -> list[tuple[str, str, str]]:

@@ -229,7 +229,6 @@ def streaming_pipeline(spark: SparkSession, pages_path: str, checkpoint: str, ou
     q.awaitTermination()
 
 
-_STATE_SCHEMA = "user_id long, n long, total double"
 _OUT_SCHEMA = "user_id long, n long, total double"
 
 
